@@ -19,6 +19,9 @@ import graft.core.GraftSession
   *    timed run (codegen + JIT + parquet footer caches).
   *  - Failures are NOT swallowed into timings: a failed query records
   *    -1 and its error lands in the JSON `errors` map and on stderr.
+  *  - One-time costs are charged once: memo builds as `memo_sec`, the
+  *    first schema resolution of each table as `catalog_sec`; both are
+  *    part of `value` and of no query's seconds.
   */
 object Bench {
 
@@ -364,13 +367,33 @@ object Bench {
                   parAnchor: Double, hostScale: Double, contended: Boolean,
                   errorCount: Int, totalNorm: Double, total: Double,
                   runner: String = "unknown", defaultPar: Int = -1,
-                  maxConc: Int = -1): String =
+                  maxConc: Int = -1, catalogSec: Double = 0.0): String =
     s"""{"metric":"total_trailer","sf":"$sfDir","cpus":$cpus,""" +
       s""""runner":"$runner","load_avg_start":$load0,"cpu_anchor_sec":$anchor,""" +
       s""""par_anchor_sec":$parAnchor,"anchor_scale":$hostScale,""" +
       s""""contended":$contended,"error_count":$errorCount,""" +
       s""""default_parallelism":$defaultPar,"max_concurrent_tasks":$maxConc,""" +
-      s""""total_hostnorm":$totalNorm,"value":$total,"unit":"sec"}"""
+      s""""catalog_sec":$catalogSec,"total_hostnorm":$totalNorm,"value":$total,"unit":"sec"}"""
+
+  /** Suite total: net per-query seconds of the queries that ran, plus
+    * every memo build and the one-time table schema resolution, each
+    * counted exactly once. Failed queries (-1) add nothing. */
+  def suiteTotal(results: Seq[(String, Double)], memoSec: Double,
+                 catalogSec: Double): Double =
+    results.map(_._2).filter(_ >= 0).sum + memoSec + catalogSec
+
+  /** Peak number of tasks running at once, from each task's
+    * [start, end) interval in ms: a sweep over the sorted end points
+    * with ends before starts at equal times, so a task that ends in the
+    * millisecond another starts does not overlap it. Unlike a running
+    * start-minus-end count over the asynchronous listener bus, the
+    * result does not depend on the order events are delivered in. */
+  def peakConcurrency(intervals: Iterable[(Long, Long)]): Int = {
+    val points = intervals.iterator
+      .flatMap { case (start, end) => Iterator((start, 1), (end, -1)) }
+      .toArray.sorted
+    points.iterator.scanLeft(0)(_ + _._2).max
+  }
 
   def main(args: Array[String]): Unit = {
     // Janitor first (r13 verdict stretch item 8): stale scratch from a
@@ -465,6 +488,18 @@ object Bench {
     }
     flushHeapDebt()
 
+    // One-time table resolution, charged once as catalog_sec (as memo_sec
+    // charges memo builds): each table's schema is inferred on its first
+    // read and served from Tables' catalog afterwards, so without this
+    // the first timed run of the first query per table would pay it and
+    // min-of-N would hide it.
+    val catalogSec = {
+      val t0 = System.nanoTime()
+      graft.core.Tables.names.foreach(n =>
+        scala.util.Try(graft.core.Tables.load(spark, sfDir, n)))
+      math.rint((System.nanoTime() - t0) / 1e6) / 1000
+    }
+
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Plan-shape telemetry: exchange mentions in the final (post-AQE)
     // executed plan — a lost broadcast or an extra shuffle shows up as a
@@ -492,15 +527,19 @@ object Bench {
     // 32-cpu capture of the same code must report different peaks
     // whenever any stage has enough tasks to fill the pool (with the
     // r21 scan fanout, every kernel-dense stage does).
-    val runningTasks = new java.util.concurrent.atomic.AtomicInteger
-    val maxConcTasks = new java.util.concurrent.atomic.AtomicInteger
+    // Each task's slot interval starts at its launch and lasts its
+    // executor-side deserialize + run + result-serialize time. Not
+    // [launchTime, finishTime): the driver stamps finishTime on its
+    // result-getter pool AFTER the slot was freed and re-offered, so a
+    // successor's launch can precede it (measured: 6 under local[4]).
+    // The executor durations end no later than the slot is freed, so
+    // the peak of these intervals cannot exceed the pool.
+    val taskSpans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskStart(t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = {
-        val r = runningTasks.incrementAndGet()
-        maxConcTasks.accumulateAndGet(r, (a: Int, b: Int) => math.max(a, b))
-      }
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        runningTasks.decrementAndGet()
+        val m = t.taskMetrics
+        taskSpans.add((t.taskInfo.launchTime, t.taskInfo.launchTime +
+          m.executorDeserializeTime + m.executorRunTime + m.resultSerializationTime))
         shuffleWritten.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
       }
     })
@@ -573,12 +612,10 @@ object Bench {
           name -> times.map(_._2).min
       }
     }
-    val ok = results.filter(_._2 >= 0)
     // Honest memo accounting: SparkEntry's shared-scan memos are built
     // inside the FIRST run of the first query that needs them, so
     // min-of-3 timing would silently hide their cost. Report build
     // seconds per memo key and fold them into the total.
-    import scala.jdk.CollectionConverters._
     val memo = SparkEntry.memoSeconds.asScala.toSeq
       .collect { case ((dir, key), sec) if dir == sfDir => key -> sec }
       .sortBy(_._1)
@@ -588,7 +625,7 @@ object Bench {
     val errJson = errors.map { case (k, v) =>
       s"\"$k\":\"${v.replace("\\", "\\\\").replace("\"", "\\\"").takeWhile(_ >= ' ')}\""
     }.mkString("{", ",", "}")
-    val total = ok.map(_._2).sum + memoTotal
+    val total = suiteTotal(results, memoTotal, catalogSec)
     val exJson = exchanges.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val shJson = shuffleMb.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val spJson = sp1.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
@@ -683,7 +720,7 @@ object Bench {
     // "unknown" (all captures before r20 predate the field).
     val runner = sys.env.getOrElse("SPARK_GRAFT_RUNNER", "unknown")
     val json =
-      s"""{"metric":"total","sf":"$sfDir","cpus":$cpus,"runner":"$runner","load_avg_start":$load0,"cpu_anchor_sec":$anchor,"par_anchor_sec":$parAnchor,"anchor_scale":$hostScale,"total_hostnorm":$totalNorm,"contended":${isContended(load0, cpus)},"errors":$errJson,"regressed":$regJson,"scaling":$scJson,"needs_standalone":$nsJson,"exchanges":$exJson,"shuffle_mb":$shJson,"sp1_unbounded":$spJson,"memo_sec":$memoJson,"queries":$qs,"value":$total,"unit":"sec"}"""
+      s"""{"metric":"total","sf":"$sfDir","cpus":$cpus,"runner":"$runner","load_avg_start":$load0,"cpu_anchor_sec":$anchor,"par_anchor_sec":$parAnchor,"anchor_scale":$hostScale,"total_hostnorm":$totalNorm,"contended":${isContended(load0, cpus)},"errors":$errJson,"regressed":$regJson,"scaling":$scJson,"needs_standalone":$nsJson,"exchanges":$exJson,"shuffle_mb":$shJson,"sp1_unbounded":$spJson,"memo_sec":$memoJson,"catalog_sec":$catalogSec,"queries":$qs,"value":$total,"unit":"sec"}"""
     // r10/r11 both had the driver's contended run overwrite the quiet
     // committed baseline in the worktree (and r13's driver run at load
     // 3.94 slipped UNDER the cpus/8 contention gate and still replaced
@@ -703,7 +740,8 @@ object Bench {
     // silently drop regression-lint coverage for every absent query.
     val trailer = trailerLine(sfDir, cpus, load0, anchor, parAnchor,
       hostScale, isContended(load0, cpus), errors.size, totalNorm, total,
-      runner, spark.sparkContext.defaultParallelism, maxConcTasks.get)
+      runner, spark.sparkContext.defaultParallelism,
+      peakConcurrency(taskSpans.asScala), catalogSec)
     if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_LOCAL"))
       Files.writeString(Paths.get(writePath), json + "\n" + trailer + "\n")
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach(p =>

@@ -313,7 +313,8 @@ class BenchLintSpec extends AnyFunSuite {
     "field the r14 truncation lost") {
     val t = Bench.trailerLine("/root/testdata/sf0.1", 32, 15.97, 0.254,
       0.384, 1.31, contended = true, errorCount = 0,
-      totalNorm = 112.0, total = 146.6, runner = "run_main")
+      totalNorm = 112.0, total = 146.6, runner = "run_main",
+      defaultPar = 32, maxConc = 32, catalogSec = 0.412)
     // runner provenance (r19 item 4) rides the truncation-proof line
     assert(t.contains(""""runner":"run_main""""))
     // short enough that ANY plausible tail capture keeps it whole
@@ -325,6 +326,8 @@ class BenchLintSpec extends AnyFunSuite {
     assert(Bench.parseNum(t, "par_anchor_sec") === Some(0.384))
     assert(Bench.parseNum(t, "anchor_scale") === Some(1.31))
     assert(Bench.parseNum(t, "value") === Some(146.6))
+    assert(Bench.parseNum(t, "catalog_sec") === Some(0.412))
+    assert(Bench.parseNum(t, "max_concurrent_tasks") === Some(32.0))
     assert(t.contains(""""contended":true"""))
     // and a baseline file carrying main line + trailer still parses as
     // before: first queries block and first value win
@@ -334,5 +337,25 @@ class BenchLintSpec extends AnyFunSuite {
     assert(sf === "/root/testdata/sf0.1")
     assert(qs === Map("q_a" -> 0.25, "q_b" -> 1.0, "q_c" -> -1.0))
     assert(Bench.parseNum(twoLines, "value") === Some(1.25))
+  }
+
+  test("suiteTotal: catalog and memo seconds counted once, failed queries add nothing") {
+    val results = Seq("q_a" -> 0.25, "q_b" -> 1.0, "q_c" -> -1.0)
+    assert(Bench.suiteTotal(results, memoSec = 1.5, catalogSec = 0.5) === 3.25)
+    assert(Bench.suiteTotal(Nil, memoSec = 0.0, catalogSec = 0.5) === 0.5)
+  }
+
+  test("peakConcurrency: overlapping task intervals stack, touching ones do not") {
+    assert(Bench.peakConcurrency(Nil) === 0)
+    assert(Bench.peakConcurrency(Seq((0L, 10L))) === 1)
+    // three overlap in [5, 8); the fourth starts after the others ended
+    assert(Bench.peakConcurrency(Seq((0L, 10L), (5L, 8L), (2L, 9L), (20L, 30L))) === 3)
+    // back-to-back tasks on one slot: each ends in the ms the next starts
+    assert(Bench.peakConcurrency(Seq((0L, 5L), (5L, 10L), (10L, 15L))) === 1)
+    // a pool of 2 running a chain of touching pairs never reads 3 or 4
+    val pool2 = (0 until 50).flatMap(i => Seq((i * 10L, i * 10L + 10), (i * 10L, i * 10L + 10)))
+    assert(Bench.peakConcurrency(pool2) === 2)
+    // delivery order is irrelevant: the listener bus may post ends late
+    assert(Bench.peakConcurrency(pool2.reverse) === 2)
   }
 }

@@ -153,7 +153,9 @@ class LayoutSpec extends SparkSuite {
     // The driver has regenerated testdata once already, flipping events.ts
     // from parquet TIMESTAMP(NANOS) (read as BIGINT via nanosAsLong) to
     // timestamp[us]. Tables.events must dispatch on the loaded type and
-    // yield the same BIGINT ts_ns/ts_sec contract from either encoding.
+    // yield the same BIGINT ts_ns/ts_sec contract from either encoding,
+    // whether the schema was just inferred (first read) or is supplied
+    // from Tables' catalog (every later read).
     import spark.implicits._
     val micros = Seq(0L, 999999L, 1000000L, 1723500000123456L, 4102444799999999L)
     val base = micros.zipWithIndex
@@ -167,19 +169,42 @@ class LayoutSpec extends SparkSuite {
     // as under spark.sql.legacy.parquet.nanosAsLong)
     base.select($"event_id", ($"us" * 1000L).as("ts"))
       .write.mode("overwrite").parquet(s"$tmp/ns/events.parquet")
+    // generation 1 as shipped: an INT64 annotated TIMESTAMP(NANOS), which
+    // Spark cannot write, so it goes through parquet-mr's example writer
+    locally {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.schema.MessageTypeParser
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 event_id; " +
+          "required int64 ts (TIMESTAMP(NANOS,false)); }")
+      val writer = ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"$tmp/nanos/events.parquet/part-0.parquet"))
+        .withType(schema).build()
+      val groups = new SimpleGroupFactory(schema)
+      try micros.zipWithIndex.foreach { case (us, i) =>
+        writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", us * 1000L))
+      } finally writer.close()
+    }
 
     def loaded(dir: String) = Tables.events(spark, dir)
       .select("event_id", "ts_ns", "ts_sec").orderBy("event_id")
-    val fromUs = loaded(s"$tmp/us")
-    val fromNs = loaded(s"$tmp/ns")
-    assert(fromUs.schema == fromNs.schema)
-    assert(fromUs.schema("ts_ns").dataType.typeName == "long")
-    assert(fromUs.schema("ts_sec").dataType.typeName == "long")
     val expected = micros.zipWithIndex.map { case (us, i) =>
       (i.toLong, us * 1000L, us / 1000000L)
     }
-    assert(fromUs.as[(Long, Long, Long)].collect().toSeq == expected)
-    assert(fromNs.as[(Long, Long, Long)].collect().toSeq == expected)
+    val fromUs = loaded(s"$tmp/us")
+    Seq("us", "ns", "nanos").foreach { enc =>
+      // each fixture dir is fresh: the first read infers, the second is
+      // served the catalog's schema
+      val cold = loaded(s"$tmp/$enc")
+      val cached = loaded(s"$tmp/$enc")
+      Seq(cold, cached).foreach { df =>
+        assert(df.schema == fromUs.schema, s"enc=$enc")
+        assert(df.schema("ts_ns").dataType.typeName == "long", s"enc=$enc")
+        assert(df.schema("ts_sec").dataType.typeName == "long", s"enc=$enc")
+        assert(df.as[(Long, Long, Long)].collect().toSeq == expected, s"enc=$enc")
+      }
+    }
   }
 
   test("normalizeTemporal: o_orderdate drift encodings (ntz/ltz/date/int64-nanos) all load as identical TIMESTAMP_NTZ") {

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Listener events arrive asynchronously; a test that counts them waits
+  * for the bus to deliver everything posted so far. That wait is
+  * package-private in Spark, hence this accessor in Spark's own package. */
+object ListenerBusAccess {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
