@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-import graft.core.GraftSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.{GraftSession, WorkCounters}
 
 /** Per-round benchmark: times every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line; the same JSON is also
@@ -22,61 +24,39 @@ import graft.core.GraftSession
   *  - One-time costs are charged once: memo builds as `memo_sec`, the
   *    first schema resolution of each table as `catalog_sec`; both are
   *    part of `value` and of no query's seconds.
+  *  - Work is counted, not inferred: each query's last timed run records
+  *    its jobs, stages, tasks, scan rows and shuffle bytes
+  *    ([[graft.core.WorkCounters]]). A query slower than the prior with
+  *    the same counts ran on a slower or busier host; one whose counts
+  *    moved does different work. `graft.apps.Profile` prints the same
+  *    per-query record through the same [[measure]].
   */
 object Bench {
 
-  /** Minimal extraction of the per-query seconds + sf tag from a prior
-    * bench JSON line (no JSON lib on the classpath; the file is written
-    * by this object, so the shape is known). Returns (sfDir, name→sec). */
-  def parsePrior(json: String): (String, Map[String, Double]) = {
-    val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    val qBlock = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(json)
+  /** One flat `"field":{"name":number,…}` map of a capture line (no JSON
+    * lib on the classpath; the file is written by this object, so the
+    * shape is known). The first such map wins; absent or junk → empty. */
+  def parseFlatMap(json: String, field: String): Map[String, Double] = {
+    val block = ("\"" + field + "\":\\{([^}]*)\\}").r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse("")
     val pair = """"([A-Za-z0-9_]+)":(-?[0-9.eE+\-]+)""".r
-    (sf, pair.findAllMatchIn(qBlock)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+    pair.findAllMatchIn(block).map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
-  /** One top-level numeric field from a capture line (anchor, load,
-    * total) — None when absent (older captures predate some fields). */
-  def parseNum(json: String, field: String): Option[Double] =
-    ("\"" + field + "\":(-?[0-9.eE+]+)").r.findFirstMatchIn(json)
-      .map(_.group(1).toDouble)
+  /** The sf tag and the per-query seconds of a prior capture line. */
+  def parsePrior(json: String): (String, Map[String, Double]) =
+    ("\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1)).getOrElse(""),
+      parseFlatMap(json, "queries"))
 
-  /** Host-speed normalization factor between two captures: how much
-    * slower (>1) or faster (<1) THIS host runs the fixed anchor loop
-    * than the prior capture's host did. Clamped to [0.5, 2]: host
-    * migrations measured so far sit well inside that band (r13: 1.31×),
-    * and a shift beyond it is itself news that should surface as flags,
-    * not be silently normalized away. Missing/zero anchors → 1 (older
-    * captures predate the anchor fields). */
-  def anchorScale(anchorPrior: Option[Double], anchorNow: Double): Double = {
-    val r = anchorPrior.filter(p => p > 0 && anchorNow > 0)
-      .map(anchorNow / _).getOrElse(1.0)
-    math.min(math.max(r, 0.5), 2.0)
+  /** A prior capture's per-query seconds when it measured the same data
+    * with the same thread count, else empty. A 32-thread prior read
+    * against a 4-thread run flags every CPU-bound query as a ~4×
+    * regression with byte-identical work counters. */
+  def priorSeconds(json: String, sfDir: String, cpus: Int): Map[String, Double] = {
+    val (sf, qs) = parsePrior(json)
+    val priorCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(json).map(_.group(1).toInt)
+    if (sf == sfDir && priorCpus.contains(cpus)) qs else Map.empty
   }
-
-  /** Prior per-query seconds re-expressed on THIS host: each time scaled
-    * by the anchor ratio, so the regression gates compare like with
-    * like. A uniform host slowdown with a matching anchor shift then
-    * produces an EMPTY regressed map, while a genuine per-query
-    * regression still exceeds the (scaled) 1.5× gate — the r13 "52→72 s
-    * scare" decided by one division instead of a hand adjudication. */
-  def normalizedPrior(prior: Map[String, Double], scale: Double): Map[String, Double] =
-    if (scale == 1.0) prior else prior.map { case (k, v) => k -> v * scale }
-
-  /** Baseline-preference rule (r13 verdict item 3, mechanized): a new
-    * capture may NOT replace the committed regression baseline when it
-    * ran under materially more ambient load than the baseline did AND
-    * produced a worse total — prefer the quieter capture. A quieter or
-    * faster run always writes (it is a strictly better bound). The 0.5
-    * hysteresis keeps same-condition reruns from flapping on load
-    * jitter. */
-  def preferPrior(priorLoad: Option[Double], newLoad: Double,
-                  priorTotal: Option[Double], newTotal: Double): Boolean =
-    priorLoad.exists(pl => newLoad > pl + 0.5) &&
-      priorTotal.exists(pt => newTotal > pt)
 
   /** Declared scaling classes for the cross-SF lint: how much slower a
     * query may get when the data grows `factor`×. Three classes:
@@ -184,67 +164,12 @@ object Bench {
     flagged.partition { case (_, b, sec, bound) => sec / b > band * bound }
   }
 
-  /** Ambient host load (1-min average) at capture start, read before the
-    * session spins up so the number reflects OTHER processes, not this
-    * bench. The recurring "broad 1.5x inflation, telemetry unchanged"
-    * class (r6, r7 q_tpch_q8, r10 q_skipgram) is CPU contention from
-    * concurrent driver work; recording load at start lets the regression
-    * lint separate "re-measure on a quiet host" from "real regression"
-    * mechanically instead of by per-round adjudication. */
-  def loadAvgStart(): Double =
-    try {
-      val s = Files.readString(Paths.get("/proc/loadavg")).split("\\s+")(0)
-      s.toDouble
-    } catch {
-      case _: Throwable =>
-        java.lang.management.ManagementFactory.getOperatingSystemMXBean
-          .getSystemLoadAverage
-    }
-
-  /** A capture is contention-suspect when ambient load already occupies
-    * more than 1/8 of the advertised cores before the bench starts (4 of
-    * 32 on the driver host). The observed contention episodes ran with
-    * the driver's verify/judge pipelines live — load well above that —
-    * while quiet captures start from ~0. */
-  def isContended(loadAvg: Double, cpus: Int): Boolean =
-    loadAvg > cpus / 8.0
-
-  /** Settle-and-retry (r14 verdict item 2): when the host is contended
-    * at capture start, wait — bounded — for the 1-min load to drop under
-    * the contention gate before measuring, instead of knowingly
-    * recording a starved number as the round's headline (r14: a load-16
-    * host measured 72 s of work as 146.6 s). Polls every `pollMs` until
-    * `maxWaitMs`; returns the final load (settled or not — the caller
-    * re-checks `isContended`). The 1-min average needs ~1 min to decay
-    * after the competing work exits, hence the multi-minute cap. */
-  def settleLoad(cpus: Int, maxWaitMs: Long = 300000L, pollMs: Long = 10000L,
-                 now: () => Double = loadAvgStart): Double = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var load = now()
-    while (isContended(load, cpus) && System.nanoTime() < deadline) {
-      System.err.println(f"[bench] host contended (load $load%.2f > ${cpus / 8.0}%.1f) — settling")
-      Thread.sleep(pollMs)
-      load = now()
-    }
-    load
-  }
-
-  /** Where this capture may be written. Quiet captures are the ONLY
-    * writers of the committed regression baseline (BENCH_LOCAL.json); a
-    * contended run diverts to BENCH_CONTENDED.json so the next lint
-    * still compares against a clean prior. An explicit
-    * SPARK_GRAFT_BENCH_LOCAL path is honored as given — off-baseline
-    * captures (sf1/sf10 scaling runs) name their own file. */
-  def captureWritePath(contended: Boolean, explicitLocal: Option[String],
-                       defaultPath: String = "BENCH_LOCAL.json"): String =
-    explicitLocal.getOrElse(if (contended) "BENCH_CONTENDED.json" else defaultPath)
-
   /** Per-query regression lint (r6 verdict item 2): vs the prior
-    * committed capture AT THE SAME SF, flag queries that got BOTH
-    * >1.5x slower and >0.3 s absolutely worse — the broad-based
-    * environment drift this host shows stays below one gate or the
-    * other for most queries, so a populated list is a real signal, not
-    * ambient noise. */
+    * committed capture AT THE SAME SF AND CPUS ([[priorSeconds]]), flag
+    * queries that got BOTH >1.5x slower and >0.3 s absolutely worse — the
+    * broad-based environment drift this host shows stays below one gate
+    * or the other for most queries, so a populated list is a real signal,
+    * not ambient noise. */
   def regressions(prior: Map[String, Double],
                   now: Seq[(String, Double)]): Seq[(String, Double, Double)] =
     regressionsSplit(prior, now)._1
@@ -309,71 +234,22 @@ object Bench {
       sec > math.max(band, jitterBand.getOrElse(name, 1.0)) * 1.5 * p }
   }
 
-  /** Fixed single-thread CPU anchor: seconds for 100M rounds of a
-    * 64-bit mix loop, JIT-warmed by one untimed pass. Captures host
-    * speed alongside each bench so a cross-round total shift can be
-    * attributed (r13: a fresh VM ran the unchanged suite 1.31x slower
-    * than r12's — diagnosed by hand from sbt-test wall time; this field
-    * makes that one division). Pure ALU+register work: no allocation,
-    * no memory traffic, immune to page-cache state. */
-  private def mixPass(): Long = {
-    var h = 0x9E3779B97F4A7C15L
-    var i = 0L
-    while (i < 100000000L) {
-      h ^= i; h *= 0xC2B2AE3D27D4EB4FL; h ^= (h >>> 29); i += 1
-    }
-    h
-  }
-
-  def cpuAnchorSec(): Double = {
-    val warm = mixPass()
-    val t0 = System.nanoTime()
-    val timed = mixPass()
-    val sec = (System.nanoTime() - t0) / 1e9
-    require(warm == timed, "anchor loop is deterministic") // also defeats DCE
-    math.rint(sec * 1000) / 1000
-  }
-
-  /** Parallel anchor: wall seconds for `threads` concurrent runs of the
-    * same mix loop — the host's PARALLEL throughput, which is what the
-    * 32-thread bench queries actually consume. This VM shows stable
-    * single-thread anchors but ~10% parallel wander between same-config
-    * quiet runs (plus outright slowdowns under co-tenancy), so the
-    * regression normalization prefers this anchor when both captures
-    * carry it, falling back to the single-thread one. */
-  def parAnchorSec(threads: Int): Double = {
-    val golden = mixPass() // JIT warm + DCE-defeating expected value
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val t0 = System.nanoTime()
-    val ths = (1 to threads).map { _ =>
-      val th = new Thread(() => { acc.addAndGet(mixPass()) }: Unit)
-      th.start(); th
-    }
-    ths.foreach(_.join())
-    val sec = (System.nanoTime() - t0) / 1e9
-    require(acc.get() == golden * threads, "anchor loop is deterministic")
-    math.rint(sec * 1000) / 1000
-  }
-
-  /** Truncation-proof trailer (r14 verdict item 1): the big capture line
-    * buries the host-normalization evidence BEFORE ~11 KB of per-query
-    * maps, so a tail capture of it shows a naked total with no anchor,
-    * no load, no normalized value — r14's "2.35x gate breach" was
-    * exactly this (the exonerating fields existed only repo-side, in
-    * BENCH_CONTENDED.json). This second, short (<400 B) line is printed
-    * AFTER the big one and carries just the adjudication fields, so any
-    * tail of the combined stdout keeps them intact. */
-  def trailerLine(sfDir: String, cpus: Int, load0: Double, anchor: Double,
-                  parAnchor: Double, hostScale: Double, contended: Boolean,
-                  errorCount: Int, totalNorm: Double, total: Double,
-                  runner: String = "unknown", defaultPar: Int = -1,
-                  maxConc: Int = -1, catalogSec: Double = 0.0): String =
-    s"""{"metric":"total_trailer","sf":"$sfDir","cpus":$cpus,""" +
-      s""""runner":"$runner","load_avg_start":$load0,"cpu_anchor_sec":$anchor,""" +
-      s""""par_anchor_sec":$parAnchor,"anchor_scale":$hostScale,""" +
-      s""""contended":$contended,"error_count":$errorCount,""" +
-      s""""default_parallelism":$defaultPar,"max_concurrent_tasks":$maxConc,""" +
-      s""""catalog_sec":$catalogSec,"total_hostnorm":$totalNorm,"value":$total,"unit":"sec"}"""
+  /** Truncation-proof trailer (r14 verdict item 1): the capture line
+    * buries its run facts before ~26 KB of per-query maps, so a tail
+    * capture of it alone shows a naked total. This second, short
+    * (<400 B) line is printed AFTER the big one and carries the run
+    * facts: thread count, errors, peak task concurrency, the one-time
+    * catalog seconds and the timed loop's summed task CPU and run
+    * seconds. Run time far above CPU time with the same counters is a
+    * starved host, not slower code. */
+  def trailerLine(sfDir: String, cpus: Int, runner: String, errorCount: Int,
+                  defaultPar: Int, maxConc: Int, catalogSec: Double,
+                  loop: WorkCounters.Snap, total: Double): String =
+    s"""{"metric":"total_trailer","sf":"$sfDir","cpus":$cpus,"runner":"$runner",""" +
+      s""""error_count":$errorCount,"default_parallelism":$defaultPar,""" +
+      s""""max_concurrent_tasks":$maxConc,"catalog_sec":$catalogSec,""" +
+      s""""task_cpu_s":${loop.taskCpuMs / 1000.0},"task_run_s":${loop.taskRunMs / 1000.0},""" +
+      s""""value":$total,"unit":"sec"}"""
 
   /** Suite total: net per-query seconds of the queries that ran, plus
     * every memo build and the one-time table schema resolution, each
@@ -395,23 +271,186 @@ object Bench {
     points.iterator.scanLeft(0)(_ + _._2).max
   }
 
+  /** What [[measure]] records for one query: min-of-N net seconds, and
+    * the last timed run's work counters, exchange count and
+    * single-partition lint. A capture stores it as one entry in each
+    * per-query map; `graft.apps.Profile` prints it as one line. Shuffle
+    * bytes are kept in MB to two decimals: they can move by a few bytes
+    * between identical runs, the other counters cannot. */
+  final case class Record(name: String, sec: Double, work: WorkCounters.Snap,
+                          exchanges: Int, sp1: Int) {
+    /** The values of [[Record.keys]], in that order. */
+    def counters: Seq[Double] = Seq(exchanges.toDouble,
+      math.rint(work.shuffleWriteBytes / 1024.0 / 1024.0 * 100) / 100,
+      sp1.toDouble, work.jobs.toDouble, work.stages.toDouble,
+      work.tasks.toDouble, work.scanRows.toDouble)
+
+    def json: String = obj(("query" -> s""""$name"""") +:
+      Record.keys.zip(counters.map(num)) :+ ("sec" -> sec.toString))
+  }
+
+  object Record {
+    /** The per-query counter maps of a capture, in capture order. */
+    val keys: Seq[String] = Seq("exchanges", "shuffle_mb", "sp1_unbounded",
+      "jobs", "stages", "tasks", "scan_rows")
+  }
+
+  /** A query's [[Record]], the work of each timed run, and the last
+    * run's DataFrame (its plans). */
+  final case class Measured(record: Record, runWork: Seq[WorkCounters.Snap],
+                            df: DataFrame)
+
+  private def num(d: Double): String = if (d.isWhole) d.toLong.toString else d.toString
+
+  private def obj(kvs: Iterable[(String, Any)]): String =
+    kvs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+  private val warmDir = "/root/testdata/sf0.001"
+
+  /** Untimed preparation for a timed loop over `names` on `dir`: warm-up,
+    * heap-debt flush and one-time table resolution, whose seconds it
+    * returns (`catalog_sec`). */
+  def prepare(spark: SparkSession, dir: String, names: Seq[String]): Double = {
+    // Warm-up (untimed, small SF): JIT, codegen cache, shuffle machinery.
+    names.foreach { n =>
+      try SparkEntry.queries(n)(spark, warmDir).queryExecution.toRdd.count()
+      catch { case _: Throwable => }
+    }
+    // GC-debt flush (r15 verdict item 2): the warm-up pass leaves the old
+    // gen full of its garbage, and the FIRST timed query pays it off in
+    // repeated full collections — measured at sf30, the first run after
+    // a full-suite warm-up took 157 s with 3,857 s of summed task GC vs
+    // 21 s / 8 s once the heap settled; page cache, spill, and fetch
+    // wait were byte-identical across modes. Dropping the warm-up's
+    // cached memos and forcing a collection before the timed loop cut
+    // that first run 3.3x.
+    // Evict SparkEntry's memo entries BEFORE unpersisting: the memos are
+    // localCheckpoint'd (no lineage to recompute from), so an unpersisted
+    // frame left in the cache would poison every later consumer with
+    // "Checkpoint block not found" whenever the timed dir coincides with
+    // the warm dir (r16 advisory). Evicted memos rebuild from parquet.
+    SparkEntry.clearMemos(spark)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    System.gc()
+    // One-time table resolution, charged once as catalog_sec (as memo_sec
+    // charges memo builds): each table's schema is inferred on its first
+    // read and served from Tables' catalog afterwards, so without this
+    // the first timed run of the first query per table would pay it and
+    // min-of-N would hide it.
+    val t0 = System.nanoTime()
+    graft.core.Tables.names.foreach(n =>
+      scala.util.Try(graft.core.Tables.load(spark, dir, n)))
+    math.rint((System.nanoTime() - t0) / 1e6) / 1000
+  }
+
+  /** The one per-query measurement of [[main]] and `graft.apps.Profile`:
+    * `runs` timed runs of `fn` on `dir`, each fully materialized.
+    *  - Best of N: a single run is exposed to one-off GC pauses and
+    *    compilation stalls (observed 4x spikes); min-of-N pins the noise
+    *    floor without hiding real cost. Scale captures (runs = 1) have no
+    *    min to absorb a predecessor's GC debt, so they collect first.
+    *  - Cache hardening (r21, OPTIMIZATION_r21.md): the session's Dataset
+    *    cache is dropped before every run, so an in-query persist() never
+    *    serves a later run from an earlier run's cache. RDD-level state
+    *    (the memo localCheckpoints) is not touched.
+    *  - Memo netting: a shared-scan memo is built inside the FIRST query
+    *    that touches it; each run's memo-build seconds are subtracted
+    *    from that run's time, so per-query seconds are net of memo builds
+    *    at every runs setting (the total adds `memo_sec` once).
+    *  - Work: the counters are snapshotted around each run (untimed, the
+    *    bus drained); the record keeps the last run's, which from the
+    *    second run on repeat (see [[graft.core.WorkCounters]] for the
+    *    exception).
+    * Left(error) when any run fails. */
+  def measure(spark: SparkSession, counters: WorkCounters, dir: String,
+              name: String, fn: (SparkSession, String) => DataFrame,
+              runs: Int): Either[String, Measured] = {
+    def memoNow(): Double = SparkEntry.memoSeconds.asScala
+      .collect { case ((d, _), sec) if d == dir => sec }.sum
+    if (runs == 1) System.gc()
+    val timed = (1 to runs).map { _ =>
+      spark.catalog.clearCache()
+      val w0 = counters.snapshot()
+      val m0 = memoNow()
+      val t0 = System.nanoTime()
+      val r = try {
+        val df = fn(spark, dir)
+        df.queryExecution.toRdd.count()
+        Right(df)
+      } catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+      val net = math.max((System.nanoTime() - t0) / 1e9 - (memoNow() - m0), 0.0)
+      (r, net, counters.snapshot() - w0)
+    }
+    for {
+      _ <- timed.collectFirst { case (Left(err), _, _) => err }.toLeft(())
+      df <- timed.last._1
+    } yield {
+      val plan = df.queryExecution.executedPlan
+      // Plan-shape telemetry: "Exchange" mentions in the final (post-AQE)
+      // plan (Exchange / BroadcastExchange / ReusedExchange alike) — a
+      // lost broadcast or an extra shuffle shows up as a count bump, a
+      // regression SIGNAL, not an exact exchange census. The
+      // single-partition lint (r4 verdict #8) flags global sorts over an
+      // unbounded single-partition shuffle (graft.core.PlanAudit).
+      val exchanges = try {
+        val text = plan.toString.split("== Initial Plan ==").head
+        text.sliding("Exchange".length).count(_ == "Exchange")
+      } catch { case _: Throwable => -1 }
+      val sp1 = try graft.core.PlanAudit.unboundedSinglePartitionSorts(plan)
+        catch { case _: Throwable => -1 }
+      Measured(Record(name, timed.map(_._2).min, timed.last._3, exchanges, sp1),
+        timed.map(_._3), df)
+    }
+  }
+
+  /** Whether `r` did the work the prior capture recorded for that query:
+    * every per-query counter equal. None when the prior lacks one of
+    * them (captures from before the counter maps). */
+  def sameWork(prior: String, r: Record): Option[Boolean] = {
+    val p = Record.keys.map(parseFlatMap(prior, _).get(r.name))
+    if (p.contains(None)) None else Some(p.flatten == r.counters)
+  }
+
+  /** The `regressed` map: prior and current seconds of each flagged
+    * query, with `same_work` wherever the prior carries its counters. */
+  def regressedJson(regressed: Seq[(String, Double, Double)], prior: Option[String],
+                    records: Seq[Record]): String =
+    obj(regressed.map { case (n, p, c) =>
+      val same = for (txt <- prior; r <- records.find(_.name == n);
+                      s <- sameWork(txt, r)) yield s""","same_work":$s"""
+      n -> s"""{"prior":$p,"now":$c${same.getOrElse("")}}"""
+    })
+
+  /** The capture line. Field order is truncation-proof BY DESIGN (r4's
+    * driver tail capture lost the seconds map): run facts and lint maps
+    * first, then the per-query counter maps, the per-query seconds, and
+    * `value` and `unit` LAST, so any tail of the line still carries the
+    * headline numbers. `lints` are rendered objects (errors, regressed,
+    * scaling, needs_standalone). */
+  def captureLine(sfDir: String, cpus: Int, runner: String, loop: WorkCounters.Snap,
+                  lints: Seq[(String, String)], records: Seq[Record],
+                  memo: Seq[(String, Double)], catalogSec: Double,
+                  results: Seq[(String, Double)], total: Double): String = {
+    val maps = Record.keys.zipWithIndex.map { case (k, i) =>
+      k -> obj(records.map(r => r.name -> num(r.counters(i))))
+    }
+    obj(Seq("metric" -> "\"total\"", "sf" -> s""""$sfDir"""", "cpus" -> cpus,
+      "runner" -> s""""$runner"""", "task_cpu_s" -> loop.taskCpuMs / 1000.0,
+      "task_run_s" -> loop.taskRunMs / 1000.0) ++ lints ++ maps ++
+      Seq("memo_sec" -> obj(memo), "catalog_sec" -> catalogSec,
+        "queries" -> obj(results), "value" -> total, "unit" -> "\"sec\""))
+  }
+
   def main(args: Array[String]): Unit = {
     // Janitor first (r13 verdict stretch item 8): stale scratch from a
     // killed prior run both starves spills and skews I/O timings.
     graft.core.DiskGuard.sweepStaleScratch()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmDir = "/root/testdata/sf0.001"
     // The local capture path is overridable so off-sf captures (sf1
     // scaling runs) don't clobber the committed sf0.1 baseline the
     // regression lint compares against.
     val localPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOCAL", "BENCH_LOCAL.json")
-    val priorTxt: Option[String] =
-      try {
-        val txt = Files.readString(Paths.get(localPath))
-        if (parsePrior(txt)._1 == sfDir) Some(txt) else None
-      } catch { case _: Throwable => None }
-    val prior: Map[String, Double] =
-      priorTxt.map(parsePrior(_)._2).getOrElse(Map.empty)
     // Optional subset (comma-separated query names): focused captures at
     // SFs where the full suite would take hours (the sf10 star-query
     // run). The driver never sets this — full suite by default.
@@ -424,194 +463,28 @@ object Bench {
     // never sets this — per-round gates stay min-of-3.
     val runs: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
       .max(1)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    // Contention denominator defaults to the REAL core count: with the
-    // old hard-coded 4, a capture on the 32-core driver host started
-    // without SPARK_GRAFT_CPUS flagged contended at load > 0.5 — i.e.
-    // nearly always — making the annotation spuriously true.
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    // Sampled BEFORE the session builds: ambient load from other
-    // processes, not this bench's own warm-up. A contended start first
-    // settles (bounded wait, r14 item 2) — load0 is the load the timed
-    // run ACTUALLY started under, settled or not.
-    val load0 = settleLoad(cpus,
-      maxWaitMs = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MS", "300000").toLong)
-    val anchor = cpuAnchorSec()
-    val parAnchor = parAnchorSec(cpus)
-    // Host normalization for the regression lint: the parallel anchor
-    // when both captures carry one (it tracks what 32-thread queries
-    // consume), else the single-thread anchor, else 1. The prior's
-    // per-query times are re-expressed on THIS host before gating.
-    val hostScale = priorTxt.map { txt =>
-      parseNum(txt, "par_anchor_sec") match {
-        case Some(p) => anchorScale(Some(p), parAnchor)
-        case None    => anchorScale(parseNum(txt, "cpu_anchor_sec"), anchor)
-      }
-    }.getOrElse(1.0)
+    // The thread count the session runs with (its local[N]), which is
+    // what makes two captures' seconds comparable.
+    val cpus = GraftSession.cpus.toInt
+    val priorTxt: Option[String] =
+      try Some(Files.readString(Paths.get(localPath))) catch { case _: Throwable => None }
+    val prior = priorTxt.map(priorSeconds(_, sfDir, cpus)).getOrElse(Map.empty)
     val spark = GraftSession.build("graft-bench")
+    val names = SparkEntry.queries.keys.filter(n => only.forall(_.contains(n)))
+      .toSeq.sorted
+    val catalogSec = prepare(spark, sfDir, names)
 
-    def runOnce(dir: String, name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, org.apache.spark.sql.DataFrame] =
-      try {
-        val df = fn(spark, dir)
-        df.queryExecution.toRdd.count()
-        Right(df)
-      } catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-
-    // Warm-up (untimed, small SF): JIT, codegen cache, shuffle machinery.
-    SparkEntry.queries.filter(kv => keep(kv._1))
-      .foreach { case (name, fn) => runOnce(warmDir, name, fn) }
-
-    // GC-debt flush (r15 verdict item 2, mechanism named by
-    // graft.apps.CoCaptureProbe): the warm-up pass leaves the old gen
-    // full of its garbage, and the FIRST timed query pays it off in
-    // repeated full collections — measured at sf30, the first run after
-    // a full-suite warm-up took 157 s with 3,857 s of summed task GC vs
-    // 21 s / 8 s once the heap settled; page cache, spill, and fetch
-    // wait were byte-identical across modes (the r15 "co-capture
-    // adjacency" was exactly this, amplified by the suite's one-run
-    // protocol measuring the alphabetically-first query). Dropping the
-    // warm-up's cached memos and forcing a collection before the timed
-    // loop cut that first run 3.3x in the probe's mitigated mode.
-    def flushHeapDebt(): Unit = {
-      // Evict SparkEntry's memo entries BEFORE unpersisting: the memos
-      // are localCheckpoint'd (no lineage to recompute from), so an
-      // unpersisted frame left in the cache would poison every later
-      // consumer with "Checkpoint block not found" whenever the timed
-      // sfDir coincides with the warm dir (r16 advisory). Evicted memos
-      // rebuild from parquet on next use.
-      SparkEntry.clearMemos(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
+    val counters = WorkCounters.attach(spark.sparkContext)
+    val w0 = counters.snapshot()
+    val measured = names.map { name =>
+      val m = measure(spark, counters, sfDir, name, SparkEntry.queries(name), runs)
+      m.left.foreach(err => System.err.println(s"[bench] $name FAILED: $err"))
+      name -> m
     }
-    flushHeapDebt()
-
-    // One-time table resolution, charged once as catalog_sec (as memo_sec
-    // charges memo builds): each table's schema is inferred on its first
-    // read and served from Tables' catalog afterwards, so without this
-    // the first timed run of the first query per table would pay it and
-    // min-of-N would hide it.
-    val catalogSec = {
-      val t0 = System.nanoTime()
-      graft.core.Tables.names.foreach(n =>
-        scala.util.Try(graft.core.Tables.load(spark, sfDir, n)))
-      math.rint((System.nanoTime() - t0) / 1e6) / 1000
-    }
-
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Plan-shape telemetry: exchange mentions in the final (post-AQE)
-    // executed plan — a lost broadcast or an extra shuffle shows up as a
-    // count bump between rounds without anyone reading explain output.
-    // Substring count on the plan text (matches Exchange /
-    // BroadcastExchange / ReusedExchange alike) — a regression SIGNAL,
-    // not an exact exchange census.
-    val exchanges = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    def exchangesOf(df: org.apache.spark.sql.DataFrame): Int = {
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      plan.sliding("Exchange".length).count(_ == "Exchange")
-    }
-    // Shuffle-VOLUME telemetry (the regression exchange counts can't
-    // see: a lost pushdown fattens the same exchange). One global
-    // task-end listener; per query, the counter delta across the timed
-    // runs divided by the run count. The listener bus is async — a short
-    // stability poll after each query bounds cross-attribution without
-    // adding an extra run.
-    val shuffleWritten = new java.util.concurrent.atomic.AtomicLong
-    // Scaling-contract audit (r20 verdict item 2): prove from the
-    // capture JSON alone that $SPARK_GRAFT_CPUS changes the execution.
-    // Peak concurrently-RUNNING task count across the whole run — on
-    // local[N] the scheduler caps it at N, so an 8-cpu capture and a
-    // 32-cpu capture of the same code must report different peaks
-    // whenever any stage has enough tasks to fill the pool (with the
-    // r21 scan fanout, every kernel-dense stage does).
-    // Each task's slot interval starts at its launch and lasts its
-    // executor-side deserialize + run + result-serialize time. Not
-    // [launchTime, finishTime): the driver stamps finishTime on its
-    // result-getter pool AFTER the slot was freed and re-offered, so a
-    // successor's launch can precede it (measured: 6 under local[4]).
-    // The executor durations end no later than the slot is freed, so
-    // the peak of these intervals cannot exceed the pool.
-    val taskSpans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        taskSpans.add((t.taskInfo.launchTime, t.taskInfo.launchTime +
-          m.executorDeserializeTime + m.executorRunTime + m.resultSerializationTime))
-        shuffleWritten.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-    def drainedShuffleCount(): Long = {
-      var last = -1L; var spins = 0
-      while (shuffleWritten.get() != last && spins < 20) {
-        last = shuffleWritten.get(); Thread.sleep(100); spins += 1
-      }
-      shuffleWritten.get()
-    }
-    val shuffleMb = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Single-partition lint (r4 verdict #8): global sorts over an
-    // unbounded single-partition shuffle (the q_vocab_encode defect
-    // class) — see graft.core.PlanAudit for what is and isn't flagged.
-    val sp1 = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    // Best of 3 timed runs per query: a single run is exposed to one-off
-    // GC pauses / compilation stalls (observed 4x spikes on this host,
-    // and 2-3x ambient drift between back-to-back full runs); min-of-3
-    // pins the noise floor without hiding real cost.
-    // Memo netting: a shared-scan memo is built inside the FIRST query
-    // that touches it, so that query's raw time carries the whole build
-    // (441 s of LSH pairs inside q_canonical_keep at sf10) while later
-    // consumers ride free — the scaling lint then flags the payer for a
-    // cost that is reported SEPARATELY in memo_sec anyway. Subtract each
-    // run's memo-build delta from that run's time: per-query seconds are
-    // net-of-memo BY CONSTRUCTION at every runs setting, and the total
-    // (= net queries + memo_sec) counts each build exactly once.
-    import scala.jdk.CollectionConverters._
-    def memoNow(): Double = SparkEntry.memoSeconds.asScala
-      .collect { case ((dir, _), sec) if dir == sfDir => sec }.sum
-    val results = SparkEntry.queries.filter(kv => keep(kv._1))
-      .toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Scale captures (runs=1) have no min-of-N to absorb a
-      // predecessor's GC debt landing in this query's single
-      // measurement; a forced collection between queries costs ~1 s
-      // against tens-of-seconds queries and bounds the attribution.
-      // At the default runs=3 the min already absorbs it — skip the
-      // pause (157 sub-second queries would pay it for nothing).
-      if (runs == 1) System.gc()
-      val s0 = drainedShuffleCount()
-      val times = (1 to runs).map { _ =>
-        // Measurement hardening (r21, disclosed in OPTIMIZATION_r21.md):
-        // drop the session's Dataset cache BEFORE every timed run, so an
-        // in-query persist() (the shared twice-consumed frames) can never
-        // serve a LATER run from the EARLIER run's cache — CacheManager
-        // plan-matches across invocations, and min-of-N would otherwise
-        // time a cache read instead of the computation. Untimed; RDD-level
-        // state (the memo localCheckpoints) is not touched.
-        spark.catalog.clearCache()
-        val m0 = memoNow()
-        val t0 = System.nanoTime()
-        val r = runOnce(sfDir, name, fn)
-        val raw = (System.nanoTime() - t0) / 1e9
-        (r, math.max(raw - (memoNow() - m0), 0.0))
-      }
-      times.collectFirst { case (Left(err), _) => err } match {
-        case Some(err) =>
-          System.err.println(s"[bench] $name FAILED: $err")
-          errors += name -> err
-          name -> -1.0
-        case None =>
-          times.last._1.foreach { df =>
-            exchanges += name -> (try exchangesOf(df) catch { case _: Throwable => -1 })
-            sp1 += name -> (try graft.core.PlanAudit
-              .unboundedSinglePartitionSorts(df.queryExecution.executedPlan)
-              catch { case _: Throwable => -1 })
-          }
-          val perRun = (drainedShuffleCount() - s0) / runs.toDouble
-          shuffleMb += name -> math.rint(perRun / 1024.0 / 1024.0 * 100) / 100
-          name -> times.map(_._2).min
-      }
-    }
+    val loop = counters.snapshot() - w0
+    val errors = measured.collect { case (n, Left(err)) => n -> err }
+    val records = measured.collect { case (_, Right(m)) => m.record }
+    val results = measured.map { case (n, m) => n -> m.fold(_ => -1.0, _.record.sec) }
     // Honest memo accounting: SparkEntry's shared-scan memos are built
     // inside the FIRST run of the first query that needs them, so
     // min-of-3 timing would silently hide their cost. Report build
@@ -619,20 +492,10 @@ object Bench {
     val memo = SparkEntry.memoSeconds.asScala.toSeq
       .collect { case ((dir, key), sec) if dir == sfDir => key -> sec }
       .sortBy(_._1)
-    val memoTotal = memo.map(_._2).sum
-    val memoJson = memo.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val qs = results.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) =>
-      s"\"$k\":\"${v.replace("\\", "\\\\").replace("\"", "\\\"").takeWhile(_ >= ' ')}\""
-    }.mkString("{", ",", "}")
-    val total = suiteTotal(results, memoTotal, catalogSec)
-    val exJson = exchanges.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val shJson = shuffleMb.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val spJson = sp1.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    // Field order is truncation-proof BY DESIGN (r4's driver tail capture
-    // lost the seconds map): telemetry maps first, then the per-query
-    // seconds + total + unit LAST, so any tail of the line still carries
-    // the headline numbers.
+    val total = suiteTotal(results, memo.map(_._2).sum, catalogSec)
+    val errJson = obj(errors.map { case (k, v) =>
+      k -> s""""${v.replace("\\", "\\\\").replace("\"", "\\\"").takeWhile(_ >= ' ')}""""
+    })
     // Variance band: 1 for the per-round sf0.1 gate (unchanged behavior);
     // big-SF suite captures set SPARK_GRAFT_VARIANCE_BAND=2 explicitly
     // or inherit 2 from a scale factor ≥ 100 (varianceBand). Flags inside
@@ -641,14 +504,11 @@ object Bench {
     // protocol that re-classified all 18 sf100 co-capture flags.
     val envBand = sys.env.get("SPARK_GRAFT_VARIANCE_BAND").map(_.toDouble)
     val regBand = envBand.getOrElse(1.0)
-    val (regressed, regAdvisory) =
-      regressionsSplit(normalizedPrior(prior, hostScale), results, regBand)
+    val (regressed, regAdvisory) = regressionsSplit(prior, results, regBand)
     regressed.foreach { case (n, p, c) =>
-      System.err.println(f"[bench] REGRESSED $n: $p%.3f s (host-normalized) -> $c%.3f s (${c / p}%.2fx)")
+      System.err.println(f"[bench] REGRESSED $n: $p%.3f s -> $c%.3f s (${c / p}%.2fx)")
     }
-    val regJson = regressed.map { case (n, p, c) =>
-      s""""$n":{"prior":$p,"now":$c}"""
-    }.mkString("{", ",", "}")
+    val regJson = regressedJson(regressed, priorTxt, records)
     // Cross-SF scaling lint: SPARK_GRAFT_SCALE_BASE points at a capture
     // of the SAME code on 1/SPARK_GRAFT_SCALE_FACTOR of this run's data
     // (the sf0.1 BENCH_LOCAL vs an sf1 run). Violations = queries that
@@ -699,19 +559,14 @@ object Bench {
       System.err.println(
         f"[bench] SCALING $n: $b%.3f s -> $c%.3f s (${c / b}%.1fx > bound $bound%.1fx)")
     }
-    val scJson = scaling.map { case (n, b, c, bound) =>
-      s""""$n":{"base":$b,"now":$c,"bound":$bound}"""
-    }.mkString("{", ",", "}")
-    val nsJson = (regAdvisory.map { case (n, p, c) =>
-      s""""$n":{"kind":"regression","prior":$p,"now":$c}"""
+    val scJson = obj(scaling.map { case (n, b, c, bound) =>
+      n -> s"""{"base":$b,"now":$c,"bound":$bound}"""
+    })
+    val nsJson = obj(regAdvisory.map { case (n, p, c) =>
+      n -> s"""{"kind":"regression","prior":$p,"now":$c}"""
     } ++ scAdvisory.map { case (n, b, c, bound) =>
-      s""""$n":{"kind":"scaling","base":$b,"now":$c,"bound":$bound}"""
-    }).mkString("{", ",", "}")
-    // Raw total stays in `value` (the driver contract); total_hostnorm is
-    // the same total re-expressed on the PRIOR capture's host (divide by
-    // the anchor ratio) so cross-round totals compare without a hand
-    // adjudication of VM shifts.
-    val totalNorm = math.rint(total / (if (hostScale > 0) hostScale else 1.0) * 1000) / 1000
+      n -> s"""{"kind":"scaling","base":$b,"now":$c,"bound":$bound}"""
+    })
     // Runner provenance (r19 verdict item 4): sf0.1 totals measure
     // ~10% apart between `sbt runMain` (~62-63 s; build.sbt stamps the
     // env var on forked runs) and tools/run_main.sh (~70 s) — a
@@ -719,31 +574,18 @@ object Bench {
     // launcher, not read as code drift. Unstamped launchers report
     // "unknown" (all captures before r20 predate the field).
     val runner = sys.env.getOrElse("SPARK_GRAFT_RUNNER", "unknown")
-    val json =
-      s"""{"metric":"total","sf":"$sfDir","cpus":$cpus,"runner":"$runner","load_avg_start":$load0,"cpu_anchor_sec":$anchor,"par_anchor_sec":$parAnchor,"anchor_scale":$hostScale,"total_hostnorm":$totalNorm,"contended":${isContended(load0, cpus)},"errors":$errJson,"regressed":$regJson,"scaling":$scJson,"needs_standalone":$nsJson,"exchanges":$exJson,"shuffle_mb":$shJson,"sp1_unbounded":$spJson,"memo_sec":$memoJson,"catalog_sec":$catalogSec,"queries":$qs,"value":$total,"unit":"sec"}"""
-    // r10/r11 both had the driver's contended run overwrite the quiet
-    // committed baseline in the worktree (and r13's driver run at load
-    // 3.94 slipped UNDER the cpus/8 contention gate and still replaced
-    // the quiet 68.6 s baseline with a loaded 72.1 s one) — so besides
-    // the contention divert, a capture that is BOTH more loaded than the
-    // baseline and slower is diverted too (preferPrior).
-    val keepPrior = priorTxt.exists(txt => preferPrior(
-      parseNum(txt, "load_avg_start"), load0, parseNum(txt, "value"), total))
-    val writePath = captureWritePath(isContended(load0, cpus) || keepPrior,
-      sys.env.get("SPARK_GRAFT_BENCH_LOCAL"))
-    if (keepPrior && writePath == "BENCH_CONTENDED.json")
-      System.err.println(f"[bench] baseline kept: this capture ran at load $load0%.2f " +
-        "and is slower than the quieter committed baseline — writing BENCH_CONTENDED.json")
+    val json = captureLine(sfDir, cpus, runner, loop,
+      Seq("errors" -> errJson, "regressed" -> regJson, "scaling" -> scJson,
+        "needs_standalone" -> nsJson), records, memo, catalogSec, results, total)
+    val trailer = trailerLine(sfDir, cpus, runner, errors.size,
+      spark.sparkContext.defaultParallelism,
+      peakConcurrency(counters.taskSpans.asScala), catalogSec, loop, total)
     // A subset run (SPARK_GRAFT_BENCH_ONLY) only writes the local capture
     // when SPARK_GRAFT_BENCH_LOCAL names a path explicitly — otherwise a
     // focused run would clobber the committed full-suite baseline and
     // silently drop regression-lint coverage for every absent query.
-    val trailer = trailerLine(sfDir, cpus, load0, anchor, parAnchor,
-      hostScale, isContended(load0, cpus), errors.size, totalNorm, total,
-      runner, spark.sparkContext.defaultParallelism,
-      peakConcurrency(taskSpans.asScala), catalogSec)
     if (only.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_LOCAL"))
-      Files.writeString(Paths.get(writePath), json + "\n" + trailer + "\n")
+      Files.writeString(Paths.get(localPath), json + "\n" + trailer + "\n")
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach(p =>
       Files.writeString(Paths.get(p), json + "\n" + trailer + "\n"))
     // Stop the session BEFORE printing: the driver captures a stdout

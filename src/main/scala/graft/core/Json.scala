@@ -6,7 +6,7 @@ package graft.core
   * metric keys are interpolated into those lines, and a stage name can
   * carry arbitrary plan text — quotes, backslashes, newlines — which
   * unescaped would corrupt the artifact for downstream jq/python
-  * readers (r16 advisory on CoCaptureProbe.stageRows). */
+  * readers (r16 advisory on a probe main's per-stage rows). */
 object Json {
   def escape(s: String): String = {
     val b = new StringBuilder(s.length + 8)

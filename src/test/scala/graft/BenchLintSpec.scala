@@ -2,8 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench regression lint (pure functions — no Spark): prior-capture
-  * parsing must survive the real BENCH_LOCAL shape, and the regression
+import graft.core.WorkCounters
+
+/** The bench regression lint and capture shape (pure functions — no
+  * Spark): prior-capture parsing must survive the real BENCH_LOCAL
+  * shape, a prior counts only at the same sf and cpus, and the regression
   * gates must require BOTH the ratio and the absolute floor so ambient
   * host drift (broad 1.3x swings on sub-0.3 s queries) stays quiet while
   * a real 2x-on-a-1 s-query regression fires. */
@@ -13,6 +16,13 @@ class BenchLintSpec extends AnyFunSuite {
     """{"metric":"total","sf":"/root/testdata/sf0.1","errors":{},""" +
       """"exchanges":{"q_a":3,"q_b":12},"memo_sec":{"docs":1.5},""" +
       """"queries":{"q_a":0.25,"q_b":1.0,"q_c":-1.0},"value":1.25,"unit":"sec"}"""
+
+  /** One top-level numeric field of a capture or trailer line. */
+  private def field(json: String, name: String): Option[Double] =
+    ("\"" + name + "\":(-?[0-9.eE+]+)").r.findFirstMatchIn(json).map(_.group(1).toDouble)
+
+  /** Fields of the retired host-drift machinery: anchors, load, contention. */
+  private val hostDriftFields = Seq("anchor", "load_avg", "contended", "hostnorm")
 
   test("parsePrior extracts the sf tag and the per-query seconds map") {
     val (sf, qs) = Bench.parsePrior(sample)
@@ -46,40 +56,6 @@ class BenchLintSpec extends AnyFunSuite {
     // and a quadratic default-class query fires too
     val v3 = Bench.scalingViolations(base, Seq("q_tpch_q1" -> 11.0), 10.0)
     assert(v3.map(_._1) === Seq("q_tpch_q1"))
-  }
-
-  test("contention annotation: quiet host stays false, driver-pipeline load fires, " +
-    "and parsePrior still reads a capture carrying the new fields") {
-    // quiet capture (load ~0 on 32 cores) is NOT contention-suspect
-    assert(!Bench.isContended(0.05, 32))
-    // exactly at the 1/8 boundary: still quiet (strict >)
-    assert(!Bench.isContended(4.0, 32))
-    // concurrent driver verify/judge work (load 10+ of 32) IS suspect
-    assert(Bench.isContended(10.5, 32))
-    // a 4-core fallback session flags proportionally (load 2 of 4)
-    assert(Bench.isContended(2.0, 4))
-    // loadAvgStart reads a real number on this host, never throws
-    assert(Bench.loadAvgStart() >= 0.0)
-    // the enriched JSON shape still round-trips through parsePrior
-    val enriched =
-      """{"metric":"total","sf":"/root/testdata/sf0.1","cpus":32,""" +
-        """"load_avg_start":0.12,"contended":false,"errors":{},""" +
-        """"queries":{"q_a":0.25,"q_b":1.0},"value":1.25,"unit":"sec"}"""
-    val (sf, qs) = Bench.parsePrior(enriched)
-    assert(sf === "/root/testdata/sf0.1")
-    assert(qs === Map("q_a" -> 0.25, "q_b" -> 1.0))
-  }
-
-  test("captureWritePath: contended runs never overwrite the quiet committed baseline") {
-    // quiet default run → the committed regression baseline
-    assert(Bench.captureWritePath(contended = false, None) === "BENCH_LOCAL.json")
-    // contended default run → diverted side file (r10/r11 worktree-drift fix)
-    assert(Bench.captureWritePath(contended = true, None) === "BENCH_CONTENDED.json")
-    // an explicit path is honored as given, contended or not — off-baseline
-    // captures (sf1/sf10 scaling runs) name their own file deliberately
-    assert(Bench.captureWritePath(contended = true, Some("BENCH_SF10.json"))
-      === "BENCH_SF10.json")
-    assert(Bench.captureWritePath(contended = false, Some("x.json")) === "x.json")
   }
 
   test("scaleBound: pair queries bound against measured candidate volume when known") {
@@ -200,143 +176,115 @@ class BenchLintSpec extends AnyFunSuite {
     assert(Bench.regressions(prior, now) === Seq(("slow", 1.0, 2.2)))
   }
 
-  test("cpu anchor: positive, bounded, repeatable within noise") {
-    // Wall-clock assertion on a busy loop: on a contended/frequency-
-    // scaling host one pass can spike, so retry the stability check once
-    // before failing (r13 ADVICE item 3) — a REAL deopt/fold defect is
-    // deterministic and fails both attempts.
-    def attempt(): (Double, Double) = (Bench.cpuAnchorSec(), Bench.cpuAnchorSec())
-    val (a, b) = {
-      val first = attempt()
-      if (math.max(first._1, first._2) / math.min(first._1, first._2) < 2.0) first
-      else attempt()
-    }
-    // ~0.1-1 s on any plausible host; 10 s would mean the loop was
-    // deoptimized (anchor useless), 0 would mean it was folded away
-    assert(a > 0.01 && a < 10.0, s"anchor out of range: $a")
-    // same JVM, back-to-back: a >2x swing would make the field noise
-    assert(math.max(a, b) / math.min(a, b) < 2.0, s"anchor unstable: $a vs $b")
-  }
-
-  test("parseNum pulls top-level anchor/load/total fields; absent → None") {
-    val cap =
-      """{"metric":"total","sf":"/x","cpus":32,"load_avg_start":0.05,""" +
-        """"cpu_anchor_sec":0.218,"par_anchor_sec":0.31,"anchor_scale":1.0,""" +
-        """"queries":{"q_a":0.25},"value":68.58,"unit":"sec"}"""
-    assert(Bench.parseNum(cap, "cpu_anchor_sec") === Some(0.218))
-    assert(Bench.parseNum(cap, "par_anchor_sec") === Some(0.31))
-    assert(Bench.parseNum(cap, "load_avg_start") === Some(0.05))
-    assert(Bench.parseNum(cap, "value") === Some(68.58))
-    assert(Bench.parseNum(cap, "not_there") === None)
-    assert(Bench.parseNum("", "value") === None)
-  }
-
-  test("anchorScale: ratio of anchors, clamped to [0.5, 2], 1 when unknown") {
-    assert(math.abs(Bench.anchorScale(Some(0.2), 0.26) - 1.3) < 1e-12)
-    assert(Bench.anchorScale(Some(0.26), 0.2) === 0.2 / 0.26)
-    // clamped: a >2x 'host shift' is news, not normalization material
-    assert(Bench.anchorScale(Some(0.1), 0.5) === 2.0)
-    assert(Bench.anchorScale(Some(0.5), 0.1) === 0.5)
-    // missing or degenerate anchors → no normalization
-    assert(Bench.anchorScale(None, 0.2) === 1.0)
-    assert(Bench.anchorScale(Some(0.0), 0.2) === 1.0)
-    assert(Bench.anchorScale(Some(0.2), 0.0) === 1.0)
-  }
-
-  test("anchor normalization: a uniform 1.3x host slowdown with a matching " +
-    "anchor shift yields an EMPTY regressed map; a genuine 2x still fires") {
-    val prior = Map("q_a" -> 1.0, "q_b" -> 2.0, "q_c" -> 0.8)
-    // the r13 scenario: every query 1.3x slower, anchor moved 0.2 -> 0.26
-    val hostShift = prior.toSeq.map { case (k, v) => k -> v * 1.3 }
-    val scale = Bench.anchorScale(Some(0.2), 0.26)
-    assert(Bench.regressions(Bench.normalizedPrior(prior, scale), hostShift)
-      === Seq.empty)
-    // …whereas WITHOUT normalization two of the three would have flagged
-    assert(Bench.regressions(prior, hostShift).nonEmpty === false) // 1.3 < 1.5 gate
-    val hostShift16 = prior.toSeq.map { case (k, v) => k -> v * 1.6 }
-    assert(Bench.regressions(prior, hostShift16).nonEmpty) // raw: false alarms
-    assert(Bench.regressions(
-      Bench.normalizedPrior(prior, Bench.anchorScale(Some(0.2), 0.32)),
-      hostShift16) === Seq.empty) // normalized: quiet
-    // a genuine single-query 2x fires through the normalization: same
-    // host (scale 1) …
-    val oneBad = Seq("q_a" -> 2.0, "q_b" -> 2.0, "q_c" -> 0.8)
-    assert(Bench.regressions(Bench.normalizedPrior(prior, 1.0), oneBad)
-      .map(_._1) === Seq("q_a"))
-    // … and on a 1.3x-slower host a 2.6x absolute (2x real) still fires
-    val oneBadShifted = Seq("q_a" -> 2.6, "q_b" -> 2.6, "q_c" -> 1.04)
-    assert(Bench.regressions(Bench.normalizedPrior(prior, 1.3), oneBadShifted)
-      .map(_._1) === Seq("q_a"))
-  }
-
-  test("preferPrior: a more-loaded AND slower capture never replaces the " +
-    "quiet committed baseline; quieter or faster runs always write") {
-    // the r13 case: committed 68.58 s @ load 0.05 vs driver 72.12 @ 3.94
-    assert(Bench.preferPrior(Some(0.05), 3.94, Some(68.58), 72.12))
-    // faster despite load → write (strictly better bound)
-    assert(!Bench.preferPrior(Some(0.05), 3.94, Some(68.58), 60.0))
-    // quieter run → write, even if slower (code may genuinely be slower)
-    assert(!Bench.preferPrior(Some(3.0), 0.1, Some(68.58), 75.0))
-    // load jitter inside the 0.5 hysteresis → write
-    assert(!Bench.preferPrior(Some(0.1), 0.4, Some(68.58), 69.0))
-    // no prior metadata (older capture) → write
-    assert(!Bench.preferPrior(None, 3.94, Some(68.58), 72.12))
-    assert(!Bench.preferPrior(Some(0.05), 3.94, None, 72.12))
-  }
-
-  test("parallel anchor: positive, bounded, and not wildly off the single-thread one") {
-    val par = Bench.parAnchorSec(4)
-    assert(par > 0.01 && par < 30.0, s"par anchor out of range: $par")
-  }
-
-  test("settleLoad: quiet start returns immediately; a contended start polls " +
-    "until the load drops; a never-settling host hits the deadline and returns") {
-    // quiet: no polling at all (a throwing second sample would fail)
-    var calls = 0
-    val quiet = Bench.settleLoad(32, maxWaitMs = 1000, pollMs = 1,
-      now = () => { calls += 1; 0.1 })
-    assert(quiet === 0.1 && calls === 1)
-    // contended then settling: returns the SETTLED load (what the timed
-    // run actually starts under), having polled past the contended samples
-    val samples = Iterator(16.0, 12.0, 3.0)
-    val settled = Bench.settleLoad(32, maxWaitMs = 10000, pollMs = 1,
-      now = () => samples.next())
-    assert(settled === 3.0)
-    // never settles: bounded — returns a still-contended load at deadline
-    // instead of hanging the capture (caller marks contended + diverts)
-    val stuck = Bench.settleLoad(32, maxWaitMs = 50, pollMs = 10,
-      now = () => 16.0)
-    assert(stuck === 16.0 && Bench.isContended(stuck, 32))
-  }
-
   test("trailer line: short, tail-survivable, and carries every adjudication " +
     "field the r14 truncation lost") {
-    val t = Bench.trailerLine("/root/testdata/sf0.1", 32, 15.97, 0.254,
-      0.384, 1.31, contended = true, errorCount = 0,
-      totalNorm = 112.0, total = 146.6, runner = "run_main",
-      defaultPar = 32, maxConc = 32, catalogSec = 0.412)
+    val loop = WorkCounters.Snap(jobs = 900, stages = 1200, tasks = 9000,
+      shuffleWriteBytes = 1L << 30, scanRows = 50000000L,
+      taskRunMs = 812345L, taskCpuMs = 701234L)
+    val t = Bench.trailerLine("/root/testdata/sf0.1", 32, "run_main",
+      errorCount = 0, defaultPar = 32, maxConc = 32, catalogSec = 0.412,
+      loop = loop, total = 146.6)
     // runner provenance (r19 item 4) rides the truncation-proof line
     assert(t.contains(""""runner":"run_main""""))
     // short enough that ANY plausible tail capture keeps it whole
     assert(t.length < 400, s"trailer too long to survive truncation: ${t.length}")
     assert(!t.contains("\n"))
-    // the adjudication fields are machine-readable via the same parser
-    assert(Bench.parseNum(t, "total_hostnorm") === Some(112.0))
-    assert(Bench.parseNum(t, "load_avg_start") === Some(15.97))
-    assert(Bench.parseNum(t, "par_anchor_sec") === Some(0.384))
-    assert(Bench.parseNum(t, "anchor_scale") === Some(1.31))
-    assert(Bench.parseNum(t, "value") === Some(146.6))
-    assert(Bench.parseNum(t, "catalog_sec") === Some(0.412))
-    assert(Bench.parseNum(t, "max_concurrent_tasks") === Some(32.0))
-    assert(t.contains(""""contended":true"""))
+    assert(field(t, "cpus") === Some(32.0))
+    assert(field(t, "error_count") === Some(0.0))
+    assert(field(t, "max_concurrent_tasks") === Some(32.0))
+    assert(field(t, "catalog_sec") === Some(0.412))
+    // run time far above CPU time with equal counters reads as a starved host
+    assert(field(t, "task_cpu_s") === Some(701.234))
+    assert(field(t, "task_run_s") === Some(812.345))
+    assert(t.endsWith(""""value":146.6,"unit":"sec"}"""))
+    hostDriftFields.foreach(f => assert(!t.contains(f), f))
     // and a baseline file carrying main line + trailer still parses as
-    // before: first queries block and first value win
-    val twoLines = sample + "\n" + Bench.trailerLine("/root/testdata/sf0.1",
-      32, 0.1, 0.2, 0.3, 1.0, contended = false, 0, 1.25, 1.25)
-    val (sf, qs) = Bench.parsePrior(twoLines)
+    // before: first queries block wins
+    val (sf, qs) = Bench.parsePrior(sample + "\n" + t)
     assert(sf === "/root/testdata/sf0.1")
     assert(qs === Map("q_a" -> 0.25, "q_b" -> 1.0, "q_c" -> -1.0))
-    assert(Bench.parseNum(twoLines, "value") === Some(1.25))
+  }
+
+  private def snap(jobs: Long, tasks: Long, rows: Long) =
+    WorkCounters.Snap(jobs = jobs, stages = jobs, tasks = tasks,
+      shuffleWriteBytes = 3L << 20, scanRows = rows, taskRunMs = 0, taskCpuMs = 0)
+  private val recA = Bench.Record("q_a", 0.25, snap(2, 5, 6001215), exchanges = 1, sp1 = 0)
+  private val recB = Bench.Record("q_b", 1.0, snap(7, 40, 150000), exchanges = 12, sp1 = 1)
+
+  private def capture(records: Seq[Bench.Record], cpus: Int = 4): String =
+    Bench.captureLine("/root/testdata/sf0.1", cpus, "sbt",
+      WorkCounters.Snap(9, 9, 45, 6L << 20, 6151215, 2500, 2000),
+      Seq("errors" -> "{}", "regressed" -> "{}", "scaling" -> "{}",
+        "needs_standalone" -> "{}"),
+      records, Seq("docs" -> 1.5), 0.3,
+      records.map(r => r.name -> r.sec) :+ ("q_c" -> -1.0), 3.05)
+
+  test("capture line: counter maps for every query, no host-drift fields, value last") {
+    val c = capture(Seq(recA, recB))
+    assert(!c.contains("\n"))
+    Bench.Record.keys.foreach(k =>
+      assert(Bench.parseFlatMap(c, k).keySet === Set("q_a", "q_b"), k))
+    hostDriftFields.foreach(f => assert(!c.contains(f), f))
+    assert(field(c, "task_cpu_s") === Some(2.0) && field(c, "task_run_s") === Some(2.5))
+    // truncation-proof order: every per-query map precedes the seconds,
+    // and value + unit close the line
+    val qAt = c.indexOf(""""queries":{""")
+    Bench.Record.keys.foreach(k => assert(c.indexOf(s""""$k":{""") < qAt, k))
+    assert(c.endsWith(""""value":3.05,"unit":"sec"}"""))
+    assert(Bench.parsePrior(c) ===
+      ("/root/testdata/sf0.1", Map("q_a" -> 0.25, "q_b" -> 1.0, "q_c" -> -1.0)))
+  }
+
+  test("parseFlatMap: a capture's counter maps read back as the records' counters") {
+    val c = capture(Seq(recA, recB))
+    Bench.Record.keys.zipWithIndex.foreach { case (k, i) =>
+      assert(Bench.parseFlatMap(c, k) ===
+        Map("q_a" -> recA.counters(i), "q_b" -> recB.counters(i)), k)
+    }
+    assert(Bench.parseFlatMap(c, "scan_rows")("q_a") === 6001215.0)
+    assert(Bench.parseFlatMap(c, "shuffle_mb")("q_b") === 3.0)
+    assert(Bench.parseFlatMap(c, "memo_sec") === Map("docs" -> 1.5))
+    // a key that only ends like a map name is not that map
+    assert(Bench.parseFlatMap("""{"max_tasks":{"q_a":1}}""", "tasks").isEmpty)
+    assert(Bench.parseFlatMap("", "jobs").isEmpty)
+    assert(Bench.parseFlatMap("not json", "jobs").isEmpty)
+    assert(Bench.parseFlatMap(sample, "jobs").isEmpty)
+    // the one-line Profile record carries the same values
+    val line = recB.json
+    Bench.Record.keys.zip(recB.counters).foreach { case (k, v) =>
+      assert(field(line, k) === Some(v), k) }
+    assert(line.startsWith("""{"query":"q_b","""))
+  }
+
+  test("priorSeconds: a prior at another cpus count or sf yields an empty regressed map") {
+    val prior = capture(Seq(recA, recB), cpus = 32)
+    val slower = Seq("q_a" -> 1.0, "q_b" -> 4.0) // 4x: what local[4] reads vs local[32]
+    assert(Bench.regressions(Bench.priorSeconds(prior, "/root/testdata/sf0.1", 32),
+      slower).map(_._1) === Seq("q_a", "q_b"))
+    assert(Bench.priorSeconds(prior, "/root/testdata/sf0.1", 4).isEmpty)
+    assert(Bench.regressions(Bench.priorSeconds(prior, "/root/testdata/sf0.1", 4),
+      slower).isEmpty)
+    assert(Bench.priorSeconds(prior, "/root/testdata/sf0.01", 32).isEmpty)
+    // a prior that predates the cpus field is not comparable either
+    assert(Bench.priorSeconds(sample, "/root/testdata/sf0.1", 4).isEmpty)
+  }
+
+  test("same_work: each regression says whether the prior recorded the same counters") {
+    val prior = capture(Seq(recA, recB))
+    val now = Seq(recA.copy(sec = 1.0),
+      recB.copy(sec = 4.0, work = recB.work.copy(tasks = 80)))
+    val reg = Bench.regressions(Bench.parsePrior(prior)._2, now.map(r => r.name -> r.sec))
+    assert(reg.map(_._1) === Seq("q_a", "q_b"))
+    val json = Bench.regressedJson(reg, Some(prior), now)
+    // same counts, 4x the wall: the host moved; more tasks: the code did
+    assert(json.contains(""""q_a":{"prior":0.25,"now":1.0,"same_work":true}"""))
+    assert(json.contains(""""q_b":{"prior":1.0,"now":4.0,"same_work":false}"""))
+    assert(Bench.sameWork(prior, recA) === Some(true))
+    // a prior without counter maps labels nothing
+    assert(Bench.sameWork(sample, recA) === None)
+    val bare = Bench.regressedJson(reg, Some(sample), now)
+    assert(!bare.contains("same_work") && bare.contains(""""q_a":{"prior":0.25,"now":1.0}"""))
+    assert(Bench.regressedJson(Nil, Some(prior), now) === "{}")
   }
 
   test("suiteTotal: catalog and memo seconds counted once, failed queries add nothing") {

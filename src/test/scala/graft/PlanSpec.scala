@@ -79,7 +79,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("new TPC-H shapes: exchange counts stay at their audited bounds") {
-    // locks in the round-4 plan audit (apps/PlanDump at sf0.01): q8 and
+    // locks in the round-4 plan audit (executed plans at sf0.01): q8 and
     // q17 are single-exchange with every dimension broadcast; q11/q15
     // two (agg + scalar reuse); q21 three (join + countDistinct expand +
     // final agg). Upper bounds, not equalities: AQE may broadcast MORE

@@ -14,13 +14,11 @@ cd /root/repo
 # Files the DRIVER writes after the session ends (or rewrites each
 # round): these being untracked/modified at round close is the policy,
 # not a violation.
-ALLOW='^(CORRECTNESS_r[0-9]+\.json|BENCH_r[0-9]+\.json|LEAKCHECK\.json|COPYCHECK\.json|PROGRESS\.jsonl|TESTDATA\.md|BASELINE\.(md|json)|VERDICT\.md|ADVICE\.md|BENCH_CONTENDED\.json)$'
+ALLOW='^(CORRECTNESS_r[0-9]+\.json|BENCH_r[0-9]+\.json|LEAKCHECK\.json|COPYCHECK\.json|PROGRESS\.jsonl|TESTDATA\.md|BASELINE\.(md|json)|VERDICT\.md|ADVICE\.md)$'
 
 # BENCH_LOCAL.json is special (r15 verdict item 4): the driver's
-# post-commit bench run legitimately rewrites the committed quiet
-# baseline when its capture is quieter-or-faster (Bench.preferPrior
-# already diverted the contended case to BENCH_CONTENDED.json). That
-# one modification is policy, not a violation — but ONLY when the
+# post-commit bench run legitimately rewrites the committed baseline.
+# That one modification is policy, not a violation — but ONLY when the
 # worktree content is the driver's own capture, i.e. it matches the
 # newest BENCH_rN.json the same run wrote. Any other BENCH_LOCAL.json
 # modification (a builder capture left uncommitted) stays red.
@@ -30,7 +28,7 @@ ALLOW='^(CORRECTNESS_r[0-9]+\.json|BENCH_r[0-9]+\.json|LEAKCHECK\.json|COPYCHECK
 # the driver's capture wrapper {"n":N,"rc":0,"tail":"<last stdout
 # bytes>"} whose tail embeds the bench lines. The line-by-line compare
 # can never match the wrapper, so also accept BENCH_LOCAL.json whose
-# total_trailer (run fingerprint: totals, anchors, error_count) equals
+# total_trailer (run fingerprint: totals, task seconds, error_count) equals
 # a total_trailer found in the wrapper's tail.
 bench_local_is_driver_rewrite() {
   local latest

@@ -197,9 +197,8 @@ def from_wrapper(path):
 def round_scales(samples):
     """Robust per-round global drift factor: the median, over the
     queries a round shares with the cross-round per-query median, of
-    sec/median. The per-round regression lint compares against an
-    ANCHOR-SCALED prior, so global host drift never reaches the 1.5x
-    gate — a band calibration must remove it the same way or it reads
+    sec/median. Global host drift is not a per-query spread, so a band
+    calibration must remove it or it reads
     one contended round (r14: ~1.8x across the board) as 28 per-query
     band breaches."""
     med = {}
