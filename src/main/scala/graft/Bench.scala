@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{GraftSession, WorkCounters}
+import graft.suite.{Registry, Scaling}
 
 /** Per-round benchmark: times every `SparkEntry.queries` entry on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line; the same JSON is also
@@ -58,53 +59,11 @@ object Bench {
     if (sf == sfDir && priorCpus.contains(cpus)) qs else Map.empty
   }
 
-  /** Declared scaling classes for the cross-SF lint: how much slower a
-    * query may get when the data grows `factor`×. Three classes:
-    *  - sublinear (bound 0.9·factor): the banded/bounded/sweep
-    *    operators whose whole point is beating linear;
-    *  - linear (bound 1.6·factor, the default): honest per-row work —
-    *    the 1.6 headroom absorbs fixed JVM/planning overhead moving
-    *    between captures and ambient drift;
-    *  - pairs (bound 5·factor): pair-MATERIALIZING dedup ops whose
-    *    OUTPUT grows quadratically in duplicate-cluster size on the
-    *    GenScale replica (measured: 28,000× more intra-cluster pairs
-    *    at sf1, cost ×35-40 — the bound says "quadratically harder
-    *    instance may cost ~5× linear", catching a true all-pairs
-    *    regression which would cost ~100×).
-    * A violation means a query left its complexity class between
-    * captures — the automated form of the r7 manual sf1 audit. */
-  private val sublinearQueries = Set(
-    "q_token_budget", "q_rolling_active", "q_rolling_merge", "q_funnel",
-    "q_funnel_within", "q_weighted_interval", "q_interval_count",
-    "q_hh_merge", "q_group_quantiles", "q_window_ranks", "q_heavy_hitters",
-    "q_rank_topk", "q_topk_per_group", "q_knn_graph", "q_embed_neardup",
-    "q_cosine_topk", "q_lsh_topk", "q_ivf_topk", "q_ivf_probe2",
-    "q_filtered_topk", "q_filtered_ivf", "q_ann_recall", "q_semantic_dedup")
-  private val pairQueries = Set(
-    "q_minhash_lsh_pairs", "q_pair_editdist", "q_dedup_agreement",
-    // multimodal near-dup is the same pair-materializing shape (banded
-    // candidate pairs over decoded fingerprints): the GenScale replica
-    // clones every item `factor` times, so intra-band pair count grows
-    // ~quadratically in factor exactly as for the text LSH ops.
-    // The clustering family (q_dedup_clusters/q_split_leakage/
-    // q_canonical_keep) left this class in r15: CC now runs over the
-    // CLASS graph, so its cost is linear in rows (class shuffle +
-    // label-expansion join), not candidate volume — the default linear
-    // bound applies and a pair-volume-sized bound would be masking slack
-    "q_audio_neardup", "q_image_neardup", "q_video_shared")
-  /** The pair queries whose candidate volume IS what the minhash
-    * `lshPairVolume` pre-flight measures (text shingle-minhash banding,
-    * directly or through the memoized lsh_pairs frame). The measured
-    * text ratio applies ONLY to these: image/audio/video banded-Hamming
-    * candidate volume grows at its own rate, and a modality growing
-    * SLOWER than text bounded by the text ratio would get a slack bound
-    * that can mask a real super-quadratic regression. Those queries take
-    * a per-query ratio (SPARK_GRAFT_PAIR_VOLUME_RATIOS) or fall back to
-    * the 5·factor small-factor default. */
-  private val minhashPairQueries = Set(
-    "q_minhash_lsh_pairs", "q_pair_editdist", "q_dedup_agreement")
-
-  /** `pairRatio`: measured candidate-pair volume ratio between the two
+  /** How much slower `name` may get at `factor`× the data, by its
+    * declared [[graft.suite.Scaling]] class; a violation means the query
+    * left its complexity class between captures.
+    *
+    * `pairRatio`: measured candidate-pair volume ratio between the two
     * captures (from `Dedup.lshPairVolume` / `graft.apps.PairVolume`) —
     * derived by `main` from the pre-flight run on BOTH capture dirs, or
     * passed via SPARK_GRAFT_PAIR_VOLUME_RATIO. Pair-materializing queries
@@ -117,12 +76,13 @@ object Bench {
   def scaleBound(name: String, factor: Double,
                  pairRatio: Option[Double] = None,
                  perQueryRatio: Map[String, Double] = Map.empty): Double =
-    if (sublinearQueries(name)) 0.9 * factor
-    else if (pairQueries(name))
-      5.0 * perQueryRatio.get(name)
-        .orElse(if (minhashPairQueries(name)) pairRatio else None)
-        .getOrElse(factor)
-    else 1.6 * factor
+    Registry.scaling(name) match {
+      case Scaling.Sublinear => 0.9 * factor
+      case Scaling.Pairs => 5.0 * perQueryRatio.getOrElse(name, factor)
+      case Scaling.MinhashPairs =>
+        5.0 * perQueryRatio.get(name).orElse(pairRatio).getOrElse(factor)
+      case Scaling.Linear => 1.6 * factor
+    }
 
   /** In-suite captures at factor ≥ 100 carry ±2× co-capture variance
     * (GC + 21 GB page-cache churn under a 64 g heap — every one of the
@@ -532,7 +492,8 @@ object Bench {
           // (42 s at sf100), so the lint needs no hand-set number.
           val pairRatio = sys.env.get("SPARK_GRAFT_PAIR_VOLUME_RATIO")
             .map(_.toDouble).orElse {
-              if (!results.exists(r => minhashPairQueries(r._1) && r._2 >= 0))
+              if (!results.exists(r =>
+                  Registry.scaling(r._1) == Scaling.MinhashPairs && r._2 >= 0))
                 None
               else try {
                 def vol(dir: String): Double = graft.dedup.Dedup

@@ -4,7 +4,7 @@ import graft.core.{Args, GraftSession, Tables}
 import graft.dedup.Dedup
 
 /** Capacity-planning probe: candidate-pair volume of the canonical
-  * documents banding (the [[graft.SparkEntry]] q_minhash_lsh_pairs
+  * documents banding (the [[graft.suite.DedupQueries]] q_minhash_lsh_pairs
   * parameters) at a given SF dir, via [[Dedup.lshPairVolume]] — the
   * number that predicts the pair explode's cost before paying it.
   * Usage: run_main.sh graft.apps.PairVolume [--data <dir>] */

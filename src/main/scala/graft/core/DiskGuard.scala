@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.suite.{Registry, Scaling}
+
 /** Pre-flight scratch-space guard for long dump/oracle jobs (r12 verdict
   * item 3): two sessions died on mid-job disk exhaustion — the sf10
   * BATCH3 oracle FAILs, the CC-family sf100 aborts at hour two, and a
@@ -24,17 +26,6 @@ import org.apache.spark.sql.SparkSession
   * GRAFT_DISK_GUARD=0 bypasses for deliberate experiments.
   */
 object DiskGuard {
-
-  /** Gated queries whose Verify dump materializes the minhash LSH
-    * candidate class (directly or through the shared lsh_pairs memo).
-    * Kept in sync with SparkEntry by DiskGuardSpec, which cross-checks
-    * each name exists. The clustering family (q_dedup_clusters /
-    * q_cluster_sizes / q_dedup_keep / q_canonical_keep /
-    * q_split_leakage) left this set in r15: it now runs over the CLASS
-    * graph (Dedup.connectedComponentsByClass) and never materializes
-    * member pairs. */
-  val pairMaterializing: Set[String] = Set(
-    "q_minhash_lsh_pairs", "q_pair_editdist", "q_dedup_agreement")
 
   /** Measured: >56e9 B scratch / 1.25e9 candidates ≈ 45 B, rounded. */
   val BytesPerCandidate = 48L
@@ -72,12 +63,13 @@ object DiskGuard {
 
   /** Scratch estimate for dumping `names` against `sfDir`. Runs the
     * lshPairVolume pre-flight (seconds, zero pairs materialized) only
-    * when a pair-materializing query is requested. */
+    * when a query that materializes the minhash LSH candidate class
+    * ([[graft.suite.Scaling.MinhashPairs]]) is requested. */
   def estimateBytes(spark: SparkSession, sfDir: String,
                     names: Set[String]): Long = {
     val base = dirBytes(sfDir)
     val pair =
-      if (names.intersect(pairMaterializing).isEmpty) 0L
+      if (!names.exists(Registry.scaling(_) == Scaling.MinhashPairs)) 0L
       else graft.dedup.Dedup
         .lshPairVolume(Tables.documents(spark, sfDir), n = 2, k = 6,
           rowsPerBand = 2)

@@ -8,12 +8,6 @@ import graft.SparkSuite
   * and the sf30 one (~0.57e9, ~27 GB → allowed on this sandbox). */
 class DiskGuardSpec extends SparkSuite {
 
-  test("pairMaterializing names are real gated queries") {
-    val known = graft.SparkEntry.queries.keySet
-    val ghosts = DiskGuard.pairMaterializing.diff(known)
-    assert(ghosts.isEmpty, s"DiskGuard lists unknown queries: $ghosts")
-  }
-
   test("shortfall: refuses below 1.5x the estimate, allows at it, names the gap") {
     // sf100 calibration: 1.25e9 candidates x 48 B = 60 GB est, 90 GB need
     val est100 = 1249249500L * DiskGuard.BytesPerCandidate

@@ -628,7 +628,7 @@ class AnalyticsSpec extends SparkSuite {
   test("q_attribution_asof gate input: planted same-µs ties flip credit vs plain attribution") {
     // The inclusive tie is attributionAsof's entire reason to exist,
     // and the real events table carries no natural same-µs pairs at
-    // gate SFs — so the gate query plants them (SparkEntry: every
+    // gate SFs — so the gate query plants them (AnalyticsQueries: every
     // AttrTieEvery-th conversion gets a touch at exactly its own ts,
     // id-offset by 2^40). On that input the two operators MUST
     // disagree: asof credits the planted tie touch (gap 0), plain

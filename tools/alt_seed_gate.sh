@@ -15,7 +15,7 @@
 #
 # NOTE for round close: if the DRIVER regenerates /root/testdata between
 # rounds, the committed q_bpe_merges/q_bpe_encode VALUES in
-# SparkEntry.oracleSql must be re-generated the same way (gen_bpe_oracle
+# graft.suite.TextQueries must be re-generated the same way (gen_bpe_oracle
 # against the new sf0.01) — this gate failing ONLY on the two BPE queries
 # in step 3 and passing step 4 is exactly that signature, not a defect.
 #

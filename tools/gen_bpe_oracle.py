@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Generate the fixed-corpus BPE oracle tables for SparkEntry.oracleSql.
+"""Generate the fixed-corpus BPE oracle tables of graft.suite.TextQueries.
 
 Independent naive BPE (train + encode), zero shared code with the Scala
 implementation — so the embedded VALUES stay a genuine cross-check of
@@ -8,7 +8,8 @@ gate's fixed scale factor:
 
     python3 tools/gen_bpe_oracle.py /root/testdata/sf0.01 12 2
 
-Prints two SQL fragments to paste into SparkEntry.oracleSql:
+Prints two SQL fragments to paste into the q_bpe_merges / q_bpe_encode
+oracles in graft.suite.TextQueries:
   - the ranked merge table (rank, left, right, pair_freq)
   - the per-distinct-word subword unit count under those merges
 (The q_bpe_encode oracle joins the word-units VALUES back onto the

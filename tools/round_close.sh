@@ -156,18 +156,18 @@ fi
 
 # Standing reminder (r16 verdict item 5): if the driver REGENERATED
 # /root/testdata between rounds (TESTDATA.md timestamp changed), the two
-# fixture-bound BPE VALUES in SparkEntry.oracleSql must be regenerated
-# against the new sf0.01 corpus:
+# fixture-bound BPE VALUES oracles in graft.suite.TextQueries must be
+# regenerated against the new sf0.01 corpus:
 #   python3 tools/gen_bpe_oracle.py /root/testdata/sf0.01 12 2
-# (paste into SparkEntry.oracleSql). The signature of forgetting: ONLY
+# (paste into the q_bpe_merges / q_bpe_encode oracles). The signature of forgetting: ONLY
 # q_bpe_merges/q_bpe_encode hash-red in the next CORRECTNESS_rN.json.
 # tools/alt_seed_gate.sh proves the rest of the oracle set is
 # content-independent on demand.
 if [ -n "$(find /root/testdata -maxdepth 1 -name 'TESTDATA*' -newer BENCH_LOCAL.json 2>/dev/null)" ] \
-   || [ "/root/repo/TESTDATA.md" -nt "src/main/scala/graft/SparkEntry.scala" ]; then
-  echo "NOTE: TESTDATA.md is newer than SparkEntry.scala — if the driver"
+   || [ "/root/repo/TESTDATA.md" -nt "src/main/scala/graft/suite/TextQueries.scala" ]; then
+  echo "NOTE: TESTDATA.md is newer than TextQueries.scala — if the driver"
   echo "      regenerated testdata, re-run tools/gen_bpe_oracle.py and"
-  echo "      refresh the two BPE VALUES oracles in SparkEntry.oracleSql."
+  echo "      refresh the two BPE VALUES oracles in graft.suite.TextQueries."
 fi
 
 exit "$dirty"

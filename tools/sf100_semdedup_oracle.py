@@ -22,7 +22,7 @@ member of T survives. The bucket cap (<= maxCluster MEMBERS) is
 modeled as sum of class multiplicities, exactly how the committed
 oracle counts rows. Every stage is linear in classes or members.
 
-Constants mirror SparkEntry: nlist=16, threshold=0.4, cap=100000.
+Constants mirror graft.suite.SimilarityQueries: nlist=16, threshold=0.4, cap=100000.
 
 Usage (mirrors sf10_pair_oracle.py):
   python3 tools/sf100_semdedup_oracle.py <sfDir> <outDir>

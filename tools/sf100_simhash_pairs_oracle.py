@@ -47,7 +47,7 @@ def rewrite(sql):
     assert t, "hamming threshold not found"
     maxh = t.group(1)
     # bucket cap lifted from the committed sp_ok clause, not hard-coded:
-    # if LshMaxBucket changes in SparkEntry the decomposer must follow
+    # if LshMaxBucket changes in graft.suite.Shared the decomposer must follow
     # (r13 advisory — a pinned 2..1000 here would drift silently)
     cap = re.search(r"BETWEEN\s+(\d+)\s+AND\s+(\d+)", sql[i:], re.I)
     assert cap, "bucket cap not found in committed sp_ok clause"
