@@ -164,9 +164,9 @@ fi
 # tools/alt_seed_gate.sh proves the rest of the oracle set is
 # content-independent on demand.
 if [ -n "$(find /root/testdata -maxdepth 1 -name 'TESTDATA*' -newer BENCH_LOCAL.json 2>/dev/null)" ] \
-   || [ "/root/repo/TESTDATA.md" -nt "src/main/scala/graft/suite/TextQueries.scala" ]; then
-  echo "NOTE: TESTDATA.md is newer than TextQueries.scala — if the driver"
-  echo "      regenerated testdata, re-run tools/gen_bpe_oracle.py and"
+   || [ "TESTDATA.md" -nt "src/main/scala/graft/suite/TextQueries.scala" ]; then
+  echo "NOTE: TESTDATA.md is newer than TextQueries.scala — if the test"
+  echo "      data was regenerated, re-run tools/gen_bpe_oracle.py and"
   echo "      refresh the two BPE VALUES oracles in graft.suite.TextQueries."
 fi
 
