@@ -2,7 +2,7 @@ package graft.apps
 
 import java.util.UUID
 
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.{Args, GraftSession}
@@ -111,6 +111,7 @@ object LongSoakMain {
     var lastProgressNs = System.nanoTime()
     var stall: Option[String] = None
     var stop = false
+    var seen: StreamingQueryProgress = null
     while (!stop && stall.isEmpty) {
       if (!q.isActive) {
         val e = q.exception
@@ -125,8 +126,9 @@ object LongSoakMain {
         // drain total — the r16/r17 full-suite flakes). recentProgress
         // holds the run's last 100 batches (> restartEvery by
         // contract), and ingestProgress is idempotent, so this repairs
-        // any loss at ~100 map puts per poll.
-        q.recentProgress.foreach(listener.ingestProgress)
+        // any loss at ~100 map puts per poll with new progress.
+        val last = q.lastProgress
+        if (last ne seen) { seen = last; q.recentProgress.foreach(listener.ingestProgress) }
         val batches = listener.batchCount(q.runId)
         if (batches > lastBatches) {
           lastBatches = batches; lastProgressNs = System.nanoTime()
@@ -134,7 +136,14 @@ object LongSoakMain {
         if (drainedNow() || batches >= restartEvery) stop = true
         else if (System.nanoTime() - lastProgressNs > noProgressTimeoutMs * 1000000L)
           stall = Some(s"no new batch for ${noProgressTimeoutMs / 1000}s with $batches batches this run")
-        else Thread.sleep(500)
+        // Poll fast so the stop lands just after a batch's progress
+        // event, at the start of the next batch. stop() interrupts a
+        // running batch, and one interrupted after its file-sink commit
+        // but before its progress event is not executed again on resume:
+        // its observed metrics never reach the census, which then stays
+        // short until the drain stalls (1 drain in 20 at spec scale when
+        // this slept 500 ms, stopping anywhere in a batch).
+        else Thread.sleep(10)
       }
     }
     // Stop between batches; the stop itself can trip the same snapshot
@@ -314,13 +323,10 @@ object LongSoakMain {
   def main(args: Array[String]): Unit = {
     val a = Args(args)
     val spark = GraftSession.build("graft-long-soak")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // Changelog checkpointing + frequent maintenance: snapshot upload and
-    // RocksDB compaction must happen MANY times within the soak window
-    // (the endurance axis under test), not be deferred past its end.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    // Frequent maintenance on the session's RocksDB + changelog store:
+    // snapshot upload and RocksDB compaction must happen MANY times
+    // within the soak window (the endurance axis under test), not be
+    // deferred past its end.
     spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "30s")
 
     val data = a.getOrElse("data", "/root/repo/testdata_sf30")

@@ -144,20 +144,19 @@ object RecoveryChainProbe {
     (samples.result(), phaseBatches.result())
   }
 
-  private[apps] def configure(spark: SparkSession, suppress: Boolean): Unit = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "2s")
-    // Suppressed: maintenance never reaches the snapshot threshold, so
-    // every resume replays the whole changelog chain from version 0 —
-    // the long-chain regime a stuck store would put a partition in.
-    // Control: aggressive cadence (threshold 2 + 2 s maintenance) so
-    // even spec-scale phases upload snapshots before their stop.
-    spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot",
-      if (suppress) "100000" else "2")
-  }
+  /** Maintenance confs of one leg, on top of the session's RocksDB +
+    * changelog state store (GraftSession).
+    * Suppressed: maintenance never reaches the snapshot threshold, so
+    * every resume replays the whole changelog chain from version 0 —
+    * the long-chain regime a stuck store would put a partition in.
+    * Control: aggressive cadence (threshold 2 + 2 s maintenance) so
+    * even spec-scale phases upload snapshots before their stop. */
+  private[apps] def legConfs(suppress: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "2s",
+    "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> (if (suppress) "100000" else "2"))
+
+  private[apps] def configure(spark: SparkSession, suppress: Boolean): Unit =
+    legConfs(suppress).foreach { case (k, v) => spark.conf.set(k, v) }
 
   def main(args: Array[String]): Unit = {
     val a = Args(args)

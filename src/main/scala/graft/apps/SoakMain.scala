@@ -17,7 +17,7 @@ import graft.text.TextAnalysis
   *  - RocksDB state store: the dedup state for a production ingest does
   *    not fit an executor heap; the soak runs the whole drain on
   *    RocksDBStateStoreProvider (spilling, changelog-checkpointed) —
-  *    the provider a real cluster deployment would configure.
+  *    the session default (GraftSession), as on a real cluster.
   *  - checkpoint restart MID-SOAK: phase 1 drains part of the backlog
   *    and is stopped between micro-batches; a NEW query object resumes
   *    from the same checkpoint and drains the rest. Exactly-once across
@@ -109,11 +109,6 @@ object SoakMain {
   def main(args: Array[String]): Unit = {
     val a = Args(args)
     val spark = GraftSession.build("graft-soak")
-    // The state store a production deployment runs: RocksDB, not the
-    // default in-heap HDFS-backed map. Must be set before the first
-    // query starts; the checkpoint then records the provider.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val data = a.getOrElse("data", "/root/repo/testdata_sf10")

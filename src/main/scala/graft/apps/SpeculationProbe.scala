@@ -232,6 +232,7 @@ object SpeculationProbe {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config(graft.core.GraftSession.streamingState)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -265,10 +266,6 @@ object SpeculationProbe {
 
     // ---- operator 3: stateful streaming ingest dedup (RocksDB +
     // changelog checkpointing) with the slow hook in the stateful stage
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     val inDir = work.resolve("stream-in")
     writeStreamBacklog(inDir)
     val beforeStream = specStarted.get()

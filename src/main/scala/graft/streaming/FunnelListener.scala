@@ -58,7 +58,7 @@ final class FunnelListener extends StreamingQueryListener {
   // (rows, memBytes, sstBytes, snapshotLagVersions).
   // Same last-delivery-wins replay semantics as `perBatch`; bounded by
   // drain length. sstBytes is the RocksDB provider's `rocksdbSstFileSize`
-  // custom metric (0 under the default in-heap provider);
+  // custom metric (0 under the in-heap HDFS-backed provider);
   // snapshotLagVersions is derived from the SnapshotLastUploaded.*
   // instance metrics (-1 when the provider reports none).
   private val stateByBatch =

@@ -20,6 +20,10 @@ object TestSpark {
     * from its own thread. */
   val taskFailures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
+  /** Every `SparkSuite.withTempDir` directory, deleted again at exit. */
+  private[graft] val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d): Unit))
+
   lazy val spark: SparkSession = {
     // local[n,2]: permit ONE task retry, matching a real cluster's
     // spark.task.maxFailures > 1 — RetryDeterminismSpec injects a
@@ -93,5 +97,21 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** Run `body` on a fresh temp directory named `prefix*`, deleting it
+    * after: streaming checkpoints (RocksDB sst/zip/changelog files)
+    * would otherwise pile up in tmp across runs. Stop any query writing
+    * there inside `body`. RocksDB maintenance uploads a stopped query's
+    * last snapshot in the background, up to one maintenance interval
+    * later, which re-creates files under the deleted directory; the
+    * directory is therefore deleted again when the JVM exits.
+    * (`StateStore.stop()` would unload the stores first, but in Spark
+    * 4.1.2 it waits for the maintenance pool while holding a lock the
+    * pool's threads need, and can hang.) */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    TestSpark.tempDirs.add(dir)
+    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 }

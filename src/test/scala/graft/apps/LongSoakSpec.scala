@@ -15,10 +15,7 @@ import graft.core.Tables
 class LongSoakSpec extends SparkSuite {
   import spark.implicits._
 
-  test("multi-restart drain: >=2 resumes, exact funnel, state series captured") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val work = java.nio.file.Files.createTempDirectory("graft-minisoak").toString
+  test("multi-restart drain: >=2 resumes, exact funnel, state series captured") { withTempDir("graft-minisoak") { work =>
     val in = s"$work/in"
     val out = s"$work/out"
     val data = "/root/testdata/sf0.01"
@@ -71,19 +68,15 @@ class LongSoakSpec extends SparkSuite {
       val batches = series.map(_._1).toSet
       assert(pr.subsetOf(batches))
       assert(!pr.contains(series.map(_._1).min))
-    } finally {
-      spark.streams.removeListener(listener)
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
+    } finally spark.streams.removeListener(listener)
+  }}
 
-  test("runPhase classifies a no-progress run as a retryable stall") {
+  test("runPhase classifies a no-progress run as a retryable stall") { withTempDir("graft-stall") { work =>
     // A stream over an EMPTY directory never commits a batch; runPhase's
     // progress deadline must classify that as a STALL (retry from
     // checkpoint), not hang or throw — the second of the two stall
     // paths (r17 verdict item 2; the snapshot-race path is pinned by
     // SnapshotRaceSpec on forged chains).
-    val work = java.nio.file.Files.createTempDirectory("graft-stall").toString
     val in = s"$work/in"
     java.nio.file.Files.createDirectories(java.nio.file.Path.of(in))
     val listener = new graft.streaming.FunnelListener().register(spark)
@@ -109,7 +102,7 @@ class LongSoakSpec extends SparkSuite {
       try { if (q.isActive) q.stop() } catch { case _: Throwable => () }
       spark.streams.removeListener(listener)
     }
-  }
+  }}
 
   /** The r19 full-suite wedge, reproduced at spec scale: a drain whose
     * census can never reach its target (here: a fresh listener over an
@@ -117,8 +110,7 @@ class LongSoakSpec extends SparkSuite {
     * a census whose events were all lost to bus drops) must abort
     * within the STALL budget (attempts that deliver nothing are a
     * streak), not burn maxPhases at a full no-progress window each. */
-  test("r19 wedge probe: attempts against a fully-committed checkpoint abort via the stall budget") {
-    val work = java.nio.file.Files.createTempDirectory("graft-minisoak3").toString
+  test("r19 wedge probe: attempts against a fully-committed checkpoint abort via the stall budget") { withTempDir("graft-minisoak3") { work =>
     val in = s"$work/in"
     java.nio.file.Files.createDirectories(java.nio.file.Path.of(in))
     (0 until 4).foreach { i =>
@@ -158,10 +150,9 @@ class LongSoakSpec extends SparkSuite {
       assert(attempts.contains(3),
         s"abort not on the 3rd consecutive stall attempt: ${e.getMessage}")
     } finally spark.streams.removeListener(l2)
-  }
+  }}
 
-  test("drainWithRestarts fails loudly when the backlog cannot drain in maxPhases") {
-    val work = java.nio.file.Files.createTempDirectory("graft-minisoak2").toString
+  test("drainWithRestarts fails loudly when the backlog cannot drain in maxPhases") { withTempDir("graft-minisoak2") { work =>
     val in = s"$work/in"
     // 6 single-line files; expectedRows of MORE than the backlog can
     // ever deliver → drained is never reached and maxPhases trips
@@ -180,5 +171,5 @@ class LongSoakSpec extends SparkSuite {
       }
       assert(e.getMessage.contains("not drained"))
     } finally spark.streams.removeListener(listener)
-  }
+  }}
 }

@@ -32,70 +32,64 @@ class StarvedProviderSpec extends SparkSuite {
   }
 
   test("injected partition never uploads a snapshot while others do") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      StarvedRocksDBProvider.ProviderClass)
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "500ms")
-    spark.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1")
     System.setProperty(StarvedRocksDBProvider.PartitionProp, "0")
-    val work = java.nio.file.Files.createTempDirectory("graft-starved-spec").toString
-    // stateful op: streaming dedup spreads state over every shuffle
-    // partition, so partition 0 holds stores to starve
-    val q = Sources.rateMicroBatch(spark, 200)
-      .dropDuplicates("value")
-      .writeStream.format("noop")
-      .option("checkpointLocation", s"$work/ckpt")
-      .start()
-    try {
-      val deadline = System.nanoTime() + 90L * 1000000000L
-      var starvedMax = Long.MinValue // worst (highest) upload seen for p0
-      var starvedSeen = false
-      var otherUploaded = false
-      while (!otherUploaded && System.nanoTime() < deadline) {
-        val p = q.lastProgress
-        if (p != null && p.stateOperators != null) p.stateOperators.foreach { so =>
-          val m = so.customMetrics
-          if (m != null) m.forEach { (k, v) =>
-            if (k.startsWith("SnapshotLastUploaded"))
-              StarvedRocksDBProvider.partitionOf(k) match {
-                case Some(0) =>
-                  starvedSeen = true
-                  starvedMax = math.max(starvedMax, v)
-                case Some(_) => if (v > 0L) otherUploaded = true
-                case None => ()
+    try withSQLConf(
+      "spark.sql.streaming.stateStore.providerClass" -> StarvedRocksDBProvider.ProviderClass,
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "500ms",
+      "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1") {
+      withTempDir("graft-starved-spec") { work =>
+        // stateful op: streaming dedup spreads state over every shuffle
+        // partition, so partition 0 holds stores to starve
+        val q = Sources.rateMicroBatch(spark, 200)
+          .dropDuplicates("value")
+          .writeStream.format("noop")
+          .option("checkpointLocation", s"$work/ckpt")
+          .start()
+        try {
+          val deadline = System.nanoTime() + 90L * 1000000000L
+          var starvedMax = Long.MinValue // worst (highest) upload seen for p0
+          var starvedSeen = false
+          var otherUploaded = false
+          while (!otherUploaded && System.nanoTime() < deadline) {
+            val p = q.lastProgress
+            if (p != null && p.stateOperators != null) p.stateOperators.foreach { so =>
+              val m = so.customMetrics
+              if (m != null) m.forEach { (k, v) =>
+                if (k.startsWith("SnapshotLastUploaded"))
+                  StarvedRocksDBProvider.partitionOf(k) match {
+                    case Some(0) =>
+                      starvedSeen = true
+                      starvedMax = math.max(starvedMax, v)
+                    case Some(_) => if (v > 0L) otherUploaded = true
+                    case None => ()
+                  }
               }
+            }
+            if (!q.isActive) throw q.exception.getOrElse(
+              new IllegalStateException("query died without exception"))
+            Thread.sleep(200)
           }
+          // The starved store must NEVER report an uploaded version > 0 at
+          // any point in the poll — deterministic regardless of load.
+          assert(starvedMax <= 0L,
+            s"starved partition 0 uploaded version $starvedMax")
+          if (otherUploaded) {
+            // isolation proven: uploads happened, just not for partition 0.
+            // The provider reports the worst-K lagging instances, and a
+            // never-uploading store is maximally lagging — it must be named.
+            assert(starvedSeen,
+              "starved partition absent from instance metrics while others uploaded")
+          } else {
+            // Same stance as RecoveryChainSpec: under parallel-suite load
+            // the maintenance pool can be starved for the whole budget —
+            // that is a load artifact, not evidence against the mechanism.
+            info("no non-starved upload observed within budget (maintenance " +
+              "starved under load) — isolation half skipped")
+          }
+        } finally {
+          try { if (q.isActive) q.stop() } catch { case _: Throwable => () }
         }
-        if (!q.isActive) throw q.exception.getOrElse(
-          new IllegalStateException("query died without exception"))
-        Thread.sleep(200)
       }
-      // The starved store must NEVER report an uploaded version > 0 at
-      // any point in the poll — deterministic regardless of load.
-      assert(starvedMax <= 0L,
-        s"starved partition 0 uploaded version $starvedMax")
-      if (otherUploaded) {
-        // isolation proven: uploads happened, just not for partition 0.
-        // The provider reports the worst-K lagging instances, and a
-        // never-uploading store is maximally lagging — it must be named.
-        assert(starvedSeen,
-          "starved partition absent from instance metrics while others uploaded")
-      } else {
-        // Same stance as RecoveryChainSpec: under parallel-suite load
-        // the maintenance pool can be starved for the whole budget —
-        // that is a load artifact, not evidence against the mechanism.
-        info("no non-starved upload observed within budget (maintenance " +
-          "starved under load) — isolation half skipped")
-      }
-    } finally {
-      try { if (q.isActive) q.stop() } catch { case _: Throwable => () }
-      System.clearProperty(StarvedRocksDBProvider.PartitionProp)
-      Seq("spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "spark.sql.streaming.stateStore.maintenanceInterval",
-        "spark.sql.streaming.stateStore.minDeltasForSnapshot")
-        .foreach(spark.conf.unset)
-    }
+    } finally System.clearProperty(StarvedRocksDBProvider.PartitionProp)
   }
 }

@@ -78,33 +78,24 @@ class StreamingHeavyHittersSpec extends SparkSuite {
     val v2 = StreamingHeavyHitters.runTws(all.toDS(), k, buckets = 3)
       .collect().map(key).sorted.toSeq
     assert(v2 === v1 && v1.nonEmpty)
-    // stream: same micro-batch splits through both APIs on RocksDB — the
-    // full update streams (candidates AND tombstones) must be identical
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def drive(name: String,
-                start: org.apache.spark.sql.Dataset[String] => org.apache.spark.sql.Dataset[Candidate]): Seq[(Int, String, Long, Long)] = {
-        val ms = mem[String]
-        val q = start(ms.toDS()).writeStream.format("memory")
-          .queryName(name).outputMode("update").start()
-        withQuery(q) {
-          batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-          spark.table(name).as[Candidate].collect().map(key).sorted.toSeq
-        }
-      }
-      val s1 = drive("shh_v1", StreamingHeavyHitters.run(_, k, 3))
-      val s2 = drive("shh_v2", StreamingHeavyHitters.runTws(_, k, 3))
-      assert(s2 === s1 && s1.nonEmpty)
-      // tombstones present in BOTH streams (drop-outs really happened)
-      assert(s1.exists(_._3 == 0L), "no tombstones exercised by the fixture")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    // stream: same micro-batch splits through both APIs on RocksDB (the
+    // session default) — the full update streams (candidates AND
+    // tombstones) must be identical
+    def drive(name: String,
+              start: org.apache.spark.sql.Dataset[String] => org.apache.spark.sql.Dataset[Candidate]): Seq[(Int, String, Long, Long)] = {
+      val ms = mem[String]
+      val q = start(ms.toDS()).writeStream.format("memory")
+        .queryName(name).outputMode("update").start()
+      withQuery(q) {
+        batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+        spark.table(name).as[Candidate].collect().map(key).sorted.toSeq
       }
     }
+    val s1 = drive("shh_v1", StreamingHeavyHitters.run(_, k, 3))
+    val s2 = drive("shh_v2", StreamingHeavyHitters.runTws(_, k, 3))
+    assert(s2 === s1 && s1.nonEmpty)
+    // tombstones present in BOTH streams (drop-outs really happened)
+    assert(s1.exists(_._3 == 0L), "no tombstones exercised by the fixture")
   }
 
   test("advance: sequential batch folds == one fold of the concatenation") {

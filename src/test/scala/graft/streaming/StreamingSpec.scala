@@ -22,6 +22,12 @@ class StreamingSpec extends SparkSuite {
   private def withQuery[T](q: StreamingQuery)(body: => T): T =
     try body finally q.stop()
 
+  /** The WindowJoin twin's two sides from (ts_sec, name, value, id) rows. */
+  private def gShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
+    col("_2").as("name"), col("_3").as("grade"), col("_4").as("g_id"))
+  private def sShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
+    col("_2").as("name"), col("_3").as("salary"), col("_4").as("s_id"))
+
   test("A4 running word count in update mode reproduces the golden per-record sequence") {
     val ms = mem[String]
     // the SAME transformation as the batch englishWordCount — running in
@@ -76,31 +82,16 @@ class StreamingSpec extends SparkSuite {
       CarEvent(0, 20, 110.0, 4000L, 4000L), CarEvent(1, 10, 60.0, 0L, 0L))
     val batch = TopSpeed.run(events.toDS()).collect().toSeq
       .sortBy(e => (e.carId, e.time))
-    // the v2 state API requires the RocksDB provider when streaming;
-    // changelog checkpointing is the at-scale companion (per-batch
-    // checkpoint uploads become incremental deltas instead of full
-    // SST snapshots — the difference between O(changed keys) and
-    // O(total state) per commit on a 100 TB keyspace)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    try {
-      val ms = mem[CarEvent]
-      val q = TopSpeed.runTws(ms.toDS()).writeStream.format("memory")
-        .queryName("tws_topspeed").outputMode("update").start()
-      withQuery(q) {
-        events.grouped(2).foreach { g => ms.addData(g: _*); q.processAllAvailable() }
-        val got = spark.table("tws_topspeed").as[CarEvent].collect().toSeq
-          .sortBy(e => (e.carId, e.time))
-        assert(got === batch)
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    // the v2 state API requires the RocksDB provider when streaming —
+    // the session default (GraftSession)
+    val ms = mem[CarEvent]
+    val q = TopSpeed.runTws(ms.toDS()).writeStream.format("memory")
+      .queryName("tws_topspeed").outputMode("update").start()
+    withQuery(q) {
+      events.grouped(2).foreach { g => ms.addData(g: _*); q.processAllAvailable() }
+      val got = spark.table("tws_topspeed").as[CarEvent].collect().toSeq
+        .sortBy(e => (e.carId, e.time))
+      assert(got === batch)
     }
   }
 
@@ -148,10 +139,6 @@ class StreamingSpec extends SparkSuite {
   test("full-outer windowed join: unmatched rows of BOTH sides emit NULLs after the watermark") {
     val gRows = Seq((0L, "tom", 3, 1L), (0L, "bob", 1, 3L))  // bob has no salary
     val sRows = Seq((1L, "tom", 100, 11L), (1L, "eve", 50, 12L)) // eve has no grade
-    def gShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
-      col("_2").as("name"), col("_3").as("grade"), col("_4").as("g_id"))
-    def sShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
-      col("_2").as("name"), col("_3").as("salary"), col("_4").as("s_id"))
     val batch = StreamingTwins.windowedFullJoin(
       gShape(gRows.toDF()), sShape(sRows.toDF()), "ts", "name", "2 seconds")
       .select(col("name"), col("g_id"), col("s_id"))
@@ -185,10 +172,6 @@ class StreamingSpec extends SparkSuite {
   test("left-outer windowed join: unmatched left rows emit NULLs after the watermark") {
     val gRows = Seq((0L, "tom", 3, 1L), (0L, "bob", 1, 3L)) // bob has no salary
     val sRows = Seq((1L, "tom", 100, 11L))
-    def gShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
-      col("_2").as("name"), col("_3").as("grade"), col("_4").as("g_id"))
-    def sShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
-      col("_2").as("name"), col("_3").as("salary"), col("_4").as("s_id"))
     val batch = StreamingTwins.windowedLeftJoin(
       gShape(gRows.toDF()), sShape(sRows.toDF()), "ts", "name", "2 seconds")
       .select(col("name"), col("g_id"), col("s_id"))
@@ -281,10 +264,6 @@ class StreamingSpec extends SparkSuite {
   test("J1 stream-stream windowed join with dual watermarks == batch join, m×n") {
     val gRows = Seq((0L, "tom", 3, 1L), (1L, "tom", 5, 2L), (0L, "bob", 1, 3L))
     val sRows = Seq((1L, "tom", 100, 11L), (3L, "tom", 200, 12L), (1L, "alice", 50, 13L))
-    def gShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
-      col("_2").as("name"), col("_3").as("grade"), col("_4").as("g_id"))
-    def sShape(df: DataFrame) = df.select(timestamp_seconds(col("_1")).as("ts"),
-      col("_2").as("name"), col("_3").as("salary"), col("_4").as("s_id"))
 
     val batch = StreamingTwins.windowedJoin(
       gShape(gRows.toDF()), sShape(sRows.toDF()), "ts", "name", "2 seconds")
@@ -304,6 +283,61 @@ class StreamingSpec extends SparkSuite {
         .select(col("name"), col("g_id"), col("s_id")).as[(String, Long, Long)]
         .collect().toSet
       assert(got === batch)
+      // the session's state choice (GraftSession): join state format 3
+      // on RocksDB holds the join's state in ONE store per partition
+      // (format 2 keeps four)
+      val Array(op) = q.lastProgress.stateOperators
+      assert(op.numStateStoreInstances === op.numShufflePartitions)
+      assert(op.customMetrics.containsKey("rocksdbSstFileSize"))
+    }
+  }
+
+  test("J1 restart from an HDFS / join-format-2 checkpoint keeps its pinned state layout") {
+    // Spark pins the state-store provider and the join state format in
+    // the checkpoint's offset metadata: a query first started before
+    // RocksDB + format 3 became the session default must resume on its
+    // old layout (never silently re-shard) and emit what an
+    // uninterrupted run emits. Step 2's matches need step 1's state.
+    val steps: Seq[(Seq[(Long, String, Int, Long)], Seq[(Long, String, Int, Long)])] = Seq(
+      (Seq((0L, "tom", 3, 1L), (0L, "bob", 1, 3L)), Seq((1L, "alice", 50, 13L))),
+      (Seq((1L, "tom", 5, 2L)), Seq((1L, "tom", 100, 11L), (1L, "bob", 7, 14L))),
+      (Seq((4L, "tom", 6, 4L)), Seq((5L, "tom", 300, 15L), (3L, "tom", 200, 12L))))
+    final class Run(base: String) {
+      val gm = mem[(Long, String, Int, Long)]
+      val sm = mem[(Long, String, Int, Long)]
+      def start(): StreamingQuery = StreamingTwins.windowedJoin(
+          gShape(gm.toDF()), sShape(sm.toDF()), "ts", "name", "2 seconds")
+        .writeStream.format("parquet").option("path", s"$base/data")
+        .option("checkpointLocation", s"$base/chk").outputMode("append").start()
+      def feed(q: StreamingQuery, i: Int): Unit = {
+        gm.addData(steps(i)._1: _*); sm.addData(steps(i)._2: _*); q.processAllAvailable()
+      }
+      def output: Seq[(String, Long, Long)] = spark.read.parquet(s"$base/data")
+        .select(col("name"), col("g_id"), col("s_id")).as[(String, Long, Long)]
+        .collect().toSeq.sorted
+    }
+    withTempDir("graft-restart-join") { dir =>
+      val resumed = new Run(s"$dir/resumed")
+      withSQLConf(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+        "spark.sql.streaming.join.stateFormatVersion" -> "2") {
+        val q1 = resumed.start()
+        withQuery(q1)(resumed.feed(q1, 0))
+      }
+      val q2 = resumed.start() // under the session defaults
+      withQuery(q2) {
+        resumed.feed(q2, 1); resumed.feed(q2, 2)
+        val Array(op) = q2.lastProgress.stateOperators
+        assert(op.numStateStoreInstances === 4 * op.numShufflePartitions)
+        assert(!op.customMetrics.containsKey("rocksdbSstFileSize"))
+      }
+      val whole = new Run(s"$dir/whole")
+      val q = whole.start()
+      withQuery(q)(steps.indices.foreach(whole.feed(q, _)))
+      assert(whole.output === Seq(("bob", 3L, 14L), ("tom", 1L, 11L),
+        ("tom", 2L, 11L), ("tom", 4L, 15L)))
+      assert(resumed.output === whole.output)
     }
   }
 
@@ -324,22 +358,23 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("K3 exactly-once across restart: a new query resumes from the checkpoint") {
-    val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
-    val ms = mem[(Long, String)]
-    def startQuery() = ms.toDF().toDF("id", "v").writeStream
-      .format("parquet").option("path", s"$base/data")
-      .option("checkpointLocation", s"$base/chk")
-      .outputMode("append").start()
-    val q1 = startQuery()
-    ms.addData((1L, "a"), (2L, "b")); q1.processAllAvailable(); q1.stop()
-    // arrives while NO query is running: must be picked up, not lost
-    ms.addData((3L, "c"))
-    val q2 = startQuery()
-    withQuery(q2) {
-      ms.addData((4L, "d")); q2.processAllAvailable()
-      val rows = spark.read.parquet(s"$base/data").as[(Long, String)].collect()
-      assert(rows.toSet === Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
-      assert(rows.length === 4) // exactly-once: restart neither dropped nor replayed
+    withTempDir("graft-restart") { base =>
+      val ms = mem[(Long, String)]
+      def startQuery() = ms.toDF().toDF("id", "v").writeStream
+        .format("parquet").option("path", s"$base/data")
+        .option("checkpointLocation", s"$base/chk")
+        .outputMode("append").start()
+      val q1 = startQuery()
+      ms.addData((1L, "a"), (2L, "b")); q1.processAllAvailable(); q1.stop()
+      // arrives while NO query is running: must be picked up, not lost
+      ms.addData((3L, "c"))
+      val q2 = startQuery()
+      withQuery(q2) {
+        ms.addData((4L, "d")); q2.processAllAvailable()
+        val rows = spark.read.parquet(s"$base/data").as[(Long, String)].collect()
+        assert(rows.toSet === Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+        assert(rows.length === 4) // exactly-once: restart neither dropped nor replayed
+      }
     }
   }
 
@@ -433,46 +468,48 @@ class StreamingSpec extends SparkSuite {
     // under a retuned session conf must keep reading the old state
     // layout, not silently re-shard. Asserted end to end: windows whose
     // state spans the restart still sum correctly.
-    val in = java.nio.file.Files.createTempDirectory("graft-evolve-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-evolve-out").toString
-    def writeFile(name: String, rows: Seq[(Long, String, Double)]): Unit =
-      java.nio.file.Files.writeString(java.nio.file.Path.of(in, name),
-        rows.map { case (t, k, v) => s"$t,$k,$v" }.mkString("", "\n", "\n"))
-    def run(): Unit = {
-      val parsed = graft.sources.Sources.readTextStream(spark, in)
-        .select(split(col("value"), ",").as("p"))
-        .select(timestamp_seconds(expr("try_cast(p[0] AS bigint)")).as("ts"),
-          expr("p[1]").as("k"), expr("try_cast(p[2] AS double)").as("v"))
-      val q = StreamingTwins.windowedSum(parsed, "ts", "k", "v", "10 seconds")
-        .writeStream.format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/checkpoint")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try assert(q.awaitTermination(180000)) finally q.stop()
+    withTempDir("graft-evolve-in") { in =>
+      withTempDir("graft-evolve-out") { out =>
+        def writeFile(name: String, rows: Seq[(Long, String, Double)]): Unit =
+          java.nio.file.Files.writeString(java.nio.file.Path.of(in, name),
+            rows.map { case (t, k, v) => s"$t,$k,$v" }.mkString("", "\n", "\n"))
+        def run(): Unit = {
+          val parsed = graft.sources.Sources.readTextStream(spark, in)
+            .select(split(col("value"), ",").as("p"))
+            .select(timestamp_seconds(expr("try_cast(p[0] AS bigint)")).as("ts"),
+              expr("p[1]").as("k"), expr("try_cast(p[2] AS double)").as("v"))
+          val q = StreamingTwins.windowedSum(parsed, "ts", "k", "v", "10 seconds")
+            .writeStream.format("parquet")
+            .option("path", s"$out/data")
+            .option("checkpointLocation", s"$out/checkpoint")
+            .outputMode("append")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          try assert(q.awaitTermination(180000)) finally q.stop()
+        }
+        // run 1 (default 32 shuffle partitions): window [0,10) still OPEN
+        writeFile("a.txt", Seq((0L, "a", 1.0), (3L, "a", 2.0), (6L, "b", 3.0)))
+        run()
+        val old = spark.conf.get("spark.sql.shuffle.partitions")
+        try {
+          spark.conf.set("spark.sql.shuffle.partitions", "7")
+          // run 2 under the retuned conf: more rows into the SAME window,
+          // then a sentinel advancing the watermark past it
+          writeFile("b.txt", Seq((8L, "a", 10.0), (100L, "z", 0.0)))
+          run()
+          writeFile("c.txt", Seq((200L, "z", 0.0))) // flush the sentinel's window
+          run()
+        } finally spark.conf.set("spark.sql.shuffle.partitions", old)
+        val got = spark.read.parquet(s"$out/data")
+          .select(unix_timestamp(col("wstart")).as("w"), col("k"), col("sum_value"))
+          .as[(Long, String, Double)].collect().toSet
+          .filter(_._1 < 100L)
+        // window state written by run 1 (1+2 for a, 3 for b) merged with run
+        // 2's late addition (10.0 for a) — only possible if the restarted
+        // query kept the original state sharding
+        assert(got === Set((0L, "a", 13.0), (0L, "b", 3.0)))
+      }
     }
-    // run 1 (default 32 shuffle partitions): window [0,10) still OPEN
-    writeFile("a.txt", Seq((0L, "a", 1.0), (3L, "a", 2.0), (6L, "b", 3.0)))
-    run()
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      // run 2 under the retuned conf: more rows into the SAME window,
-      // then a sentinel advancing the watermark past it
-      writeFile("b.txt", Seq((8L, "a", 10.0), (100L, "z", 0.0)))
-      run()
-      writeFile("c.txt", Seq((200L, "z", 0.0))) // flush the sentinel's window
-      run()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", old)
-    val got = spark.read.parquet(s"$out/data")
-      .select(unix_timestamp(col("wstart")).as("w"), col("k"), col("sum_value"))
-      .as[(Long, String, Double)].collect().toSet
-      .filter(_._1 < 100L)
-    // window state written by run 1 (1+2 for a, 3 for b) merged with run
-    // 2's late addition (10.0 for a) — only possible if the restarted
-    // query kept the original state sharding
-    assert(got === Set((0L, "a", 13.0), (0L, "b", 3.0)))
   }
 
   test("foreachBatch incremental dedup: cross-batch hash store, idempotent replay") {
