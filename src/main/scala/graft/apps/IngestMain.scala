@@ -1,7 +1,8 @@
 package graft.apps
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.{Args, GraftSession}
 import graft.sources.Sources
@@ -44,7 +45,7 @@ object IngestMain {
     * and surface per micro-batch in `StreamingQueryProgress
     * .observedMetrics` — the continuous twin of PipelineMain's one-pass
     * batch funnel audit. */
-  def transform(lines: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  def transform(lines: DataFrame): DataFrame =
     lines
       // try_cast + get(), not cast/getItem: under ANSI mode a malformed id
       // or a missing field would FAIL THE STREAM; a corrupt line must cost
@@ -72,6 +73,17 @@ object IngestMain {
       .withWatermark("ingest_ts", "1 minute")
       .dropDuplicatesWithinWatermark("doc_id")
 
+  /** The ingest sink every ingest run starts through: `df` appended as
+    * parquet under `out/data`, exactly-once via the checkpoint under
+    * `out/checkpoint`, at `trigger`. */
+  def sink(df: DataFrame, out: String, trigger: Trigger): StreamingQuery =
+    df.writeStream.format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", s"$out/checkpoint")
+      .outputMode("append")
+      .trigger(trigger)
+      .start()
+
   /** The run's funnel from an accumulating [[graft.streaming.FunnelListener]]
     * — NOT from `recentProgress`, whose 100-entry ring buffer silently
     * under-reports any run longer than
@@ -80,7 +92,7 @@ object IngestMain {
     * Blocks until the listener has seen the run's termination event so
     * the async bus cannot race the final batch's counters. */
   def listenerFunnel(l: graft.streaming.FunnelListener,
-                     q: org.apache.spark.sql.streaming.StreamingQuery): Map[String, Long] = {
+                     q: StreamingQuery): Map[String, Long] = {
     require(l.awaitTerminated(q.runId),
       s"funnel listener never saw termination of run ${q.runId}")
     Map(
@@ -96,7 +108,7 @@ object IngestMain {
     * Written through the Hadoop FileSystem API so an HDFS/S3 `dir`
     * works the same as a local one. Returns the funnel. */
   def persistFunnel(spark: org.apache.spark.sql.SparkSession,
-                    q: org.apache.spark.sql.streaming.StreamingQuery,
+                    q: StreamingQuery,
                     dir: String, funnel: Map[String, Long]): Map[String, Long] = {
     val json = funnel.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"$k\":$v" }
@@ -117,13 +129,10 @@ object IngestMain {
     val out = a.getOrElse("out", "/tmp/graft-ingest-out")
     val lines = Sources.readTextStreamThrottled(spark, in,
       a.getOrElse("files-per-trigger", "4").toInt)
-    var w = transform(lines).writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/checkpoint")
-      .outputMode("append")
-    if (a.has("available-now")) w = w.trigger(Trigger.AvailableNow())
-    val q = w.start()
+    // ProcessingTime(0) is writeStream's default: start each micro-batch
+    // as soon as the previous one ends
+    val q = sink(transform(lines), out,
+      if (a.has("available-now")) Trigger.AvailableNow() else Trigger.ProcessingTime(0L))
     if (a.has("available-now")) q.awaitTermination()
     else {
       q.awaitTermination(a.getOrElse("run-seconds", "10").toLong * 1000)

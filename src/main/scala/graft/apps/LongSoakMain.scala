@@ -95,7 +95,8 @@ object LongSoakMain {
     *    checkpointing carries correctness across it), is a STALL: stop
     *    best-effort and let the caller resume from the checkpoint,
     *    which reloads the store and unwedges it. Any other query death
-    *    still throws.
+    *    still throws; a query that ENDED without an exception (an
+    *    AvailableNow run out of backlog) ends the phase.
     *
     * Batch counting comes from the listener's per-run batch census
     * (dedup'd by batchId), NOT from sampling `lastProgress`: at a fast
@@ -113,12 +114,12 @@ object LongSoakMain {
     var stop = false
     var seen: StreamingQueryProgress = null
     while (!stop && stall.isEmpty) {
-      if (!q.isActive) {
-        val e = q.exception
-          .getOrElse(new IllegalStateException("query died without exception"))
-        if (snapshotRace(e))
+      if (!q.isActive) q.exception match {
+        // ended on its own: an AvailableNow run (SoakMain) drained its backlog
+        case None => stop = true
+        case Some(e) if snapshotRace(e) =>
           stall = Some(s"query died in the stop-vs-maintenance snapshot race: ${e.getMessage}")
-        else throw e
+        case Some(e) => throw e
       } else {
         // Reconcile from the query's OWN progress ring before reading
         // the census: the listener bus is lossy under load (dropped
@@ -207,7 +208,9 @@ object LongSoakMain {
       attempts += 1
       val before =
         if (queryId == null) 0L else listener.distinctBatches(queryId)
-      val q = startThrottled(spark, in, out, perTrigger, triggerMs)
+      val q = IngestMain.sink(
+        IngestMain.transform(Sources.readTextStreamThrottled(spark, in, perTrigger)),
+        out, Trigger.ProcessingTime(triggerMs))
       if (queryId == null) queryId = q.id
       require(q.id == queryId, "checkpoint resume changed the query id")
       val (batches, d, stall) = runPhase(q, listener, queryId, expectedRows,
@@ -259,8 +262,23 @@ object LongSoakMain {
     (queryId, phaseBatches.result(), attempts)
   }
 
-  /** One checkpoint-state file census: recursive walk of the
-    * checkpoint directory counting RocksDB artifact files by kind —
+  /** Every regular file under `dir`, relative to it (empty when `dir` is
+    * not a directory): the one checkpoint walk that the file census
+    * below and [[StarvedSoakMain.zipCountByPartition]] reduce. */
+  private[apps] def checkpointFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!java.nio.file.Files.isDirectory(dir)) Nil
+    else {
+      val stream = java.nio.file.Files.walk(dir)
+      try {
+        val b = Seq.newBuilder[java.nio.file.Path]
+        stream.forEach { p =>
+          if (java.nio.file.Files.isRegularFile(p)) b += dir.relativize(p)
+        }
+        b.result()
+      } finally stream.close()
+    }
+
+  /** One checkpoint-state file census: RocksDB artifact files by kind —
     * (sstFiles, zipFiles, changelogFiles, totalFiles). SST + zip files
     * are the uploaded snapshots, changelogs the per-batch deltas;
     * maintenance must DELETE superseded ones, so an unbounded census
@@ -268,22 +286,10 @@ object LongSoakMain {
     * per-batch metric looks healthy. Driver-side walk of a few thousand
     * files per sample — negligible next to a 6 s trigger. */
   private[apps] def checkpointCensus(dir: java.nio.file.Path): (Long, Long, Long, Long) = {
-    var sst = 0L; var zip = 0L; var chg = 0L; var all = 0L
-    if (java.nio.file.Files.isDirectory(dir)) {
-      val stream = java.nio.file.Files.walk(dir)
-      try {
-        stream.forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p)) {
-            all += 1
-            val n = p.getFileName.toString
-            if (n.endsWith(".sst")) sst += 1
-            else if (n.endsWith(".zip")) zip += 1
-            else if (n.endsWith(".changelog")) chg += 1
-          }
-        }
-      } finally stream.close()
-    }
-    (sst, zip, chg, all)
+    val files = checkpointFiles(dir)
+    def ending(suffix: String): Long =
+      files.count(_.getFileName.toString.endsWith(suffix)).toLong
+    (ending(".sst"), ending(".zip"), ending(".changelog"), files.length.toLong)
   }
 
   /** Periodic checkpoint census on a daemon thread; `stop()` returns the
@@ -308,17 +314,6 @@ object LongSoakMain {
       buf.synchronized { buf.toSeq }
     }
   }
-
-  private def startThrottled(spark: SparkSession, in: String, out: String,
-                             perTrigger: Int, triggerMs: Long) =
-    IngestMain.transform(
-        Sources.readTextStreamThrottled(spark, in, perTrigger))
-      .writeStream.format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/checkpoint")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .start()
 
   def main(args: Array[String]): Unit = {
     val a = Args(args)
@@ -482,21 +477,15 @@ object LongSoakMain {
       else ((cOk.indices by cStep).map(cOk) :+ cOk.last).distinct
     val censusJson = cSampled.map { case (t, s, z, c, a) =>
       s"""[$t,$s,$z,$c,$a]""" }.mkString("[", ",", "]")
-    // Per-store snapshot-upload attribution (r16 verdict item 1b): last
-    // observation per SnapshotLastUploaded instance metric — a single
-    // stuck store (the 10x soak's 362-version lag driver) is now named
-    // in the artifact instead of inferred from the min() series. Value =
-    // [batchId observed, last uploaded version, lag at observation].
-    val partUpJson = listener.snapshotUploadByPartition(queryId).toSeq
-      .sortBy(_._1)
-      .map { case (k, (b, up, lg)) =>
-        s""""${graft.core.Json.escape(k)}":[$b,$up,$lg]""" }
-      .mkString("{", ",", "}")
-    // Max-uploaded twin (r18): the gauge restarts at 0 on every resume,
-    // so a LAST observation of 0 can be the fresh-gauge artifact, not a
-    // starved store (the injection soak proved it against checkpoint
-    // zips on disk). Attribution claims should read the MAX census: a
-    // store is genuinely never-uploaded iff its max is 0 here.
+    // Per-store snapshot-upload attribution (r16 verdict item 1b): the
+    // highest uploaded version ever observed per SnapshotLastUploaded
+    // instance metric — a single stuck store (the 10x soak's 362-version
+    // lag driver) is named in the artifact instead of inferred from the
+    // min() series. Value = [batchId observed, max uploaded version, lag
+    // at observation]. Max, not last: the gauge restarts at 0 on every
+    // resume, so a last observation of 0 can be the fresh-gauge artifact
+    // (r18: the injection soak proved it against checkpoint zips on
+    // disk). A store is genuinely never-uploaded iff its max is 0 here.
     val partUpMaxJson = listener.snapshotUploadMaxByPartition(queryId).toSeq
       .sortBy(_._1)
       .map { case (k, (b, up, lg)) =>
@@ -520,7 +509,6 @@ object LongSoakMain {
       s""""peak_snapshot_lag_post_restart":$peakLagPr,""" +
       s""""post_restart_batches":${postRestart.size},""" +
       s""""post_restart_samples":$prJson,""" +
-      s""""snapshot_upload_by_partition":$partUpJson,""" +
       s""""snapshot_upload_max_by_partition":$partUpMaxJson,""" +
       s""""state_series_len":$n,"state_series_stride":$step,""" +
       s""""census_samples":${cOk.length},"census_stride":$cStep,""" +

@@ -3,10 +3,11 @@ package graft.apps
 import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 
 import graft.core.{Args, GraftSession}
 import graft.sources.Sources
+import graft.streaming.FunnelListener
 
 /** Restart-recovery cost as a function of changelog-chain length
   * (r16 verdict item 2).
@@ -48,38 +49,24 @@ import graft.sources.Sources
   */
 object RecoveryChainProbe {
 
+  /** Snapshot-upload lag of the query's latest progress, −1 before the
+    * first batch ([[graft.streaming.FunnelListener.snapshotLag]]). Read
+    * from `lastProgress` so the probe never depends on the async
+    * listener bus — under full-suite load the bus DROPS events, which
+    * stalled the spec-scale twin for its whole budget while the query
+    * ran fine (r17 flake). */
+  private def lagOf(p: StreamingQueryProgress): Long =
+    if (p == null || p.stateOperators == null) -1L
+    else FunnelListener.snapshotLag(p.batchId, p.stateOperators.toSeq.map(_.customMetrics))
+
   /** One leg: drain in phases that stop after cumulative batch counts
     * `targets`, measuring (chainAtResume, recoveryMs) at every resume —
     * including one final resume after the last target so the longest
-    * chain is also sampled. Returns (samples, phaseBatches). */
-  /** Snapshot-upload lag of one progress event: worst state operator's
-    * (batchId + 1 − min SnapshotLastUploaded), −1 when no operator
-    * reported the instance metric (same derivation as
-    * [[graft.streaming.FunnelListener]]'s, recomputed here from `lastProgress` so the
-    * probe never depends on the async listener bus — under full-suite
-    * load the bus DROPS events, which stalled the spec-scale twin for
-    * its whole budget while the query ran fine; r17 flake). */
-  private def lagOf(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long = {
-    if (p == null || p.stateOperators == null) return -1L
-    var lag = -1L
-    p.stateOperators.foreach { so =>
-      val m = so.customMetrics
-      if (m != null) {
-        var minUp = Long.MaxValue
-        m.forEach { (k, v) =>
-          if (k.startsWith("SnapshotLastUploaded"))
-            minUp = math.min(minUp, math.max(v, 0L))
-        }
-        if (minUp != Long.MaxValue) lag = math.max(lag, p.batchId + 1 - minUp)
-      }
-    }
-    lag
-  }
-
+    * chain is also sampled. Returns (queryId, samples, phaseBatches). */
   private[apps] def runLeg(spark: SparkSession, in: String, out: String,
                            targets: Seq[Long], triggerMs: Long,
                            maxChainAtStop: Long = Long.MaxValue)
-      : (Seq[(Long, Double)], Seq[Long]) = {
+      : (UUID, Seq[(Long, Double)], Seq[Long]) = {
     require(targets.nonEmpty && targets == targets.sorted, s"bad targets $targets")
     // Everything below polls q.lastProgress — the query's OWN progress,
     // synchronous with batch completion — never the listener bus (see
@@ -94,14 +81,9 @@ object RecoveryChainProbe {
     val stops = targets :+ (targets.last + 1)
     stops.zipWithIndex.foreach { case (target, i) =>
       val t0 = System.nanoTime()
-      val q = Sources.readTextStreamThrottled(spark, in, 1)
-        .transform(IngestMain.transform)
-        .writeStream.format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/checkpoint")
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime(triggerMs))
-        .start()
+      val q = IngestMain.sink(
+        IngestMain.transform(Sources.readTextStreamThrottled(spark, in, 1)),
+        out, Trigger.ProcessingTime(triggerMs))
       if (queryId == null) queryId = q.id
       require(q.id == queryId, "checkpoint resume changed the query id")
       val deadline = System.nanoTime() + 600L * 1000000000L
@@ -141,7 +123,7 @@ object RecoveryChainProbe {
       try { q.stop(); q.awaitTermination() } catch { case _: Throwable => () }
       phaseBatches += last.batchId - firstBatch + 1
     }
-    (samples.result(), phaseBatches.result())
+    (queryId, samples.result(), phaseBatches.result())
   }
 
   /** Maintenance confs of one leg, on top of the session's RocksDB +
@@ -173,10 +155,10 @@ object RecoveryChainProbe {
     SoakMain.buildBacklog(spark, data, in, files, dupDocs = 200L)
 
     configure(spark, suppress = true)
-    val (supSamples, supPhases) =
+    val (_, supSamples, supPhases) =
       runLeg(spark, in, s"$work/suppressed", targets, triggerMs)
     configure(spark, suppress = false)
-    val (ctlSamples, ctlPhases) =
+    val (_, ctlSamples, ctlPhases) =
       runLeg(spark, in, s"$work/control", targets, triggerMs,
         maxChainAtStop = 8L)
 

@@ -95,16 +95,11 @@ object SoakMain {
       ("backlog_docs", funnel("rows_in"), backlogLines))
   }
 
-  private[apps] def startIngest(spark: SparkSession, in: String, out: String,
+  private def startIngest(spark: SparkSession, in: String, out: String,
                           filesPerTrigger: Int) =
-    IngestMain.transform(
-        Sources.readTextStreamThrottled(spark, in, filesPerTrigger))
-      .writeStream.format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/checkpoint")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    IngestMain.sink(
+      IngestMain.transform(Sources.readTextStreamThrottled(spark, in, filesPerTrigger)),
+      out, Trigger.AvailableNow())
 
   def main(args: Array[String]): Unit = {
     val a = Args(args)
@@ -127,23 +122,20 @@ object SoakMain {
     val (nDocs, nDupes, nMalformedLines) = buildBacklog(spark, data, in, files, dupDocs)
     val backlogSec = (System.nanoTime() - t0) / 1e9
 
-    // ---- phase 1: drain until `restartAfter` micro-batches, then stop
-    // BETWEEN batches (q.stop() interrupts at a batch boundary; an
-    // uncommitted batch is simply re-run by phase 2 — that is the
-    // exactly-once contract under test).
+    // ---- phase 1: drain `restartAfter` micro-batches, then stop
+    // BETWEEN batches (an uncommitted batch is simply re-run by phase 2 —
+    // that is the exactly-once contract under test). The stop goes
+    // through LongSoakMain.runPhase, which counts batches from the
+    // listener census and repairs bus drops from the query's own ring;
+    // sampling `lastProgress` instead misses batches between polls.
     val listener = new graft.streaming.FunnelListener().register(spark)
     val t1 = System.nanoTime()
     val q1 = startIngest(spark, in, out, perTrigger)
-    var drainedInPhase1 = false
-    while (q1.isActive &&
-           Option(q1.lastProgress).forall(_.batchId < restartAfter))
-      Thread.sleep(200)
-    if (q1.isActive) q1.stop() else drainedInPhase1 = true
-    q1.awaitTermination()
-    require(listener.awaitTerminated(q1.runId), "phase-1 termination event lost")
-    // Repair any listener-bus drops from the query's own progress ring
-    // (idempotent; covers the last 100 batches — see LongSoakMain).
-    q1.recentProgress.foreach(listener.ingestProgress)
+    val (_, drainedInPhase1, stall) = LongSoakMain.runPhase(q1, listener, q1.id,
+      expectedRows = nDocs + nDupes + nMalformedLines, restartEvery = restartAfter,
+      noProgressTimeoutMs = 120000L)
+    // a stalled phase 1 is what phase 2's resume recovers from
+    stall.foreach(why => System.err.println(s"[soak] phase-1 STALL: $why"))
     val phase1Sec = (System.nanoTime() - t1) / 1e9
     // Fail fast on a misconfigured run: if phase 1 already drained the
     // backlog, phase 2 would resume into nothing and the configuration

@@ -146,12 +146,7 @@ object SpeculationProbe {
     val enc = org.apache.spark.sql.Encoders.row(df0.schema)
     val df = if (slow) df0.mapPartitions { it => slowFirstAttempt(3000L); it }(enc)
              else df0
-    val q = df.writeStream.format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/checkpoint")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val q = IngestMain.sink(df, out, org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.awaitTermination()
     spark.read.parquet(s"$out/data")
       .select("doc_id", "text_redacted", "n_emails")

@@ -19,8 +19,8 @@ import graft.streaming.StarvedRocksDBProvider
   *     with the batch index while the rest stay short — the 10× soak's
   *     observed geometry, now by construction.
   *  2. ATTRIBUTION assert: the FunnelListener per-partition census
-  *     (snapshotUploadByPartition) must NAME the injected partition —
-  *     last-uploaded version 0 at a late batch — and every other
+  *     (snapshotUploadMaxByPartition) must NAME the injected partition —
+  *     max uploaded version 0 at a late batch — and every other
   *     reported instance must have uploaded a non-zero version. The
   *     detection machinery is thereby proven against a known-true
   *     injected fault, not just observed correlating with stochastic
@@ -47,9 +47,6 @@ import graft.streaming.StarvedRocksDBProvider
   * Prints ONE JSON line (metric "soak_starved"); exits 1 on violation.
   */
 object StarvedSoakMain {
-
-  private def partitionOf(key: String): Option[Int] =
-    StarvedRocksDBProvider.partitionOf(key)
 
   def main(args: Array[String]): Unit = {
     val a = Args(args)
@@ -80,21 +77,13 @@ object StarvedSoakMain {
 
     // ---- starved leg
     System.setProperty(StarvedRocksDBProvider.PartitionProp, starved.toString)
-    val (supSamples, supPhases) =
+    val (starvedQuery, supSamples, supPhases) =
       RecoveryChainProbe.runLeg(spark, in, s"$work/starved", targets, triggerMs)
-    // Census BEFORE the control leg: keyed by query id, and runLeg does
-    // not expose it — take the per-partition maps accumulated so far
-    // across all query ids seen (one query so far). LAST-observation
-    // census kept for the artifact; the ASSERTS run on the MAX census —
-    // the first run of this soak proved last-wins reads the fresh-gauge
-    // post-restart artifact as "never uploaded" for stores whose
-    // checkpoint dirs held ~46 snapshot zips.
-    val starvedCensus = listener.allSnapshotUploads
-    val starvedCensusMax = listener.allSnapshotUploadsMax
+    val starvedCensusMax = listener.snapshotUploadMaxByPartition(starvedQuery)
 
     // ---- control leg (no starvation)
     System.clearProperty(StarvedRocksDBProvider.PartitionProp)
-    val (ctlSamples, ctlPhases) =
+    val (_, ctlSamples, ctlPhases) =
       RecoveryChainProbe.runLeg(spark, in, s"$work/control", targets, triggerMs,
         maxChainAtStop = 8L)
 
@@ -110,7 +99,7 @@ object StarvedSoakMain {
     // never-uploaded signal.
     val byPart = starvedCensusMax.toSeq
       .flatMap { case (k, (b, up, lg)) =>
-        partitionOf(k).map(p => (p, (k, b, up, lg))) }
+        StarvedRocksDBProvider.partitionOf(k).map(p => (p, (k, b, up, lg))) }
     val starvedRows = byPart.filter(_._1 == starved).map(_._2)
     val otherRows = byPart.filter(_._1 != starved).map(_._2)
     if (starvedRows.isEmpty)
@@ -173,11 +162,8 @@ object StarvedSoakMain {
 
     def fmtSamples(xs: Seq[(Long, Double)]): String = xs.map { case (c, s) =>
       s"[$c,${math.rint(s * 1000) / 1000}]" }.mkString("[", ",", "]")
-    def censusFmt(c: Map[String, (Long, Long, Long)]): String =
-      c.toSeq.sortBy(_._1).map { case (k, (b, up, lg)) =>
-        s""""${graft.core.Json.escape(k)}":[$b,$up,$lg]""" }.mkString("{", ",", "}")
-    val censusJson = censusFmt(starvedCensus)
-    val censusMaxJson = censusFmt(starvedCensusMax)
+    val censusMaxJson = starvedCensusMax.toSeq.sortBy(_._1).map { case (k, (b, up, lg)) =>
+      s""""${graft.core.Json.escape(k)}":[$b,$up,$lg]""" }.mkString("{", ",", "}")
     val zipJson = zipCounts.toSeq.sorted.map { case (p, z) =>
       s""""$p":$z""" }.mkString("{", ",", "}")
     val pricedJson = priced.map { case (chain, rec, ctlRec, delta, model, bound) =>
@@ -196,7 +182,6 @@ object StarvedSoakMain {
       s""""control_chain_rec_sec":${fmtSamples(ctlSamples)},""" +
       s""""starved_phase_batches":${supPhases.mkString("[", ",", "]")},""" +
       s""""control_phase_batches":${ctlPhases.mkString("[", ",", "]")},""" +
-      s""""snapshot_upload_last_by_partition":$censusJson,""" +
       s""""snapshot_upload_max_by_partition":$censusMaxJson,""" +
       s""""zip_files_by_partition":$zipJson,""" +
       s""""others_uploaded":$othersUploaded,""" +
@@ -212,26 +197,11 @@ object StarvedSoakMain {
   /** Snapshot zip files per state partition directory (recursive count
     * of .zip under `<checkpoint>/state/0/<pid>`) — filesystem ground truth
     * for "did this store's snapshots upload", independent of the
-    * listener bus AND of the per-run SnapshotLastUploaded gauge. */
-  private[apps] def zipCountByPartition(stateDir: String): Map[Int, Long] = {
-    val root = java.nio.file.Path.of(stateDir)
-    if (!java.nio.file.Files.isDirectory(root)) return Map.empty
-    val b = Map.newBuilder[Int, Long]
-    val parts = java.nio.file.Files.list(root)
-    try {
-      parts.forEach { p =>
-        val name = p.getFileName.toString
-        if (name.forall(_.isDigit) && java.nio.file.Files.isDirectory(p)) {
-          var zips = 0L
-          val walk = java.nio.file.Files.walk(p)
-          try walk.forEach { f =>
-            if (java.nio.file.Files.isRegularFile(f) &&
-                f.getFileName.toString.endsWith(".zip")) zips += 1
-          } finally walk.close()
-          b += ((name.toInt, zips))
-        }
-      }
-    } finally parts.close()
-    b.result()
-  }
+    * listener bus AND of the per-run SnapshotLastUploaded gauge. A
+    * partition directory that holds no file at all is absent. */
+  private[apps] def zipCountByPartition(stateDir: String): Map[Int, Long] =
+    LongSoakMain.checkpointFiles(java.nio.file.Path.of(stateDir))
+      .filter(f => f.getNameCount > 1 && f.getName(0).toString.forall(_.isDigit))
+      .groupBy(_.getName(0).toString.toInt)
+      .map { case (p, fs) => p -> fs.count(_.getFileName.toString.endsWith(".zip")).toLong }
 }

@@ -41,6 +41,17 @@ object GraftSession {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.join.stateFormatVersion" -> "3")
 
+  /** This JVM's scratch root. Spark's shutdown hooks empty it on a
+    * clean exit; `deleteOnExit` runs after those hooks and removes the
+    * root itself, which it can only do once it is empty. A killed JVM's
+    * root is left to `DiskGuard.sweepStaleScratch`. */
+  private lazy val spillRoot: String = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-spill-${ProcessHandle.current().pid()}")
+    root.deleteOnExit()
+    root.toString
+  }
+
   def builder(appName: String): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -67,8 +78,7 @@ object GraftSession {
       // with certainty — the owning pid is in the dir name, so "owner
       // dead" replaces the fragile "whole tree idle >24h" heuristic,
       // and a live-but-idle JVM's scratch is never touched (r14 ADVICE).
-      .config("spark.local.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-spill-${ProcessHandle.current().pid()}")
+      .config("spark.local.dir", spillRoot)
       .config("spark.ui.enabled", "false")
 
   def build(appName: String): SparkSession = {

@@ -20,10 +20,6 @@ object TestSpark {
     * from its own thread. */
   val taskFailures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** Every `SparkSuite.withTempDir` directory, deleted again at exit. */
-  private[graft] val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d): Unit))
-
   lazy val spark: SparkSession = {
     // local[n,2]: permit ONE task retry, matching a real cluster's
     // spark.task.maxFailures > 1 — RetryDeterminismSpec injects a
@@ -51,7 +47,7 @@ object TestSpark {
   }
 }
 
-trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
   lazy val spark: SparkSession = TestSpark.spark
 
   /** Substrings identifying task failures THIS suite deliberately
@@ -98,6 +94,10 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+}
+
+/** Temp directories for specs, with or without a session. */
+trait TempDirs {
 
   /** Run `body` on a fresh temp directory named `prefix*`, deleting it
     * after: streaming checkpoints (RocksDB sst/zip/changelog files)
@@ -110,8 +110,21 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     * 4.1.2 it waits for the maintenance pool while holding a lock the
     * pool's threads need, and can hang.) */
   def withTempDir[A](prefix: String)(body: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    TestSpark.tempDirs.add(dir)
-    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    val dir = tempDir(prefix)
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  /** A fresh temp directory named `prefix*`, deleted when the JVM exits
+    * (for fixtures made inside helpers or midway through a test). */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    TempDirs.dirs.add(dir)
+    dir.toString
+  }
+}
+
+object TempDirs {
+  /** Every `tempDir` (and so `withTempDir`) directory, deleted again at exit. */
+  private[graft] val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d): Unit))
 }

@@ -3,7 +3,6 @@ package graft.apps
 import graft.SparkSuite
 import graft.core.Tables
 import graft.sources.Sources
-import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,9 +15,9 @@ import org.apache.spark.sql.streaming.Trigger
   * the same semantics on the same input (the batch/streaming-twin
   * contract applied to the whole pipeline, not per-operator).
   *
-  * The batch twin deliberately goes through [[TextAnalysis.qualityScore]]
-  * (the batch API, a separate code path from the inline
-  * [[TextAnalysis.qualityKeep]] column the stream uses) so the two sides
+  * The batch twin ([[SoakMain.twinChecks]]) deliberately goes through
+  * `TextAnalysis.qualityScore` (the batch API, a separate code path from
+  * the inline `TextAnalysis.qualityKeep` column the stream uses) so the two sides
   * are independent formulations of the same gate, not one expression
   * evaluated twice. PipelineMain.funnel is NOT the comparator here: its
   * stage set (lang → quality → repetition → content dedup → near-dup)
@@ -29,9 +28,10 @@ import org.apache.spark.sql.streaming.Trigger
 class IngestSoakSpec extends SparkSuite {
   import spark.implicits._
 
-  test("sf0.1 soak: streamed funnel + written rows equal the batch twin exactly") {
-    val in = java.nio.file.Files.createTempDirectory("graft-soak-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-soak-out").toString
+  test("sf0.1 soak: streamed funnel + written rows equal the batch twin exactly") { withTempDir("graft-soak") { work =>
+    val in = s"$work/in"
+    val out = s"$work/out"
+    java.nio.file.Files.createDirectories(java.nio.file.Path.of(in))
 
     // ---- build the backlog: every sf0.1 document as one `id\ttext` line,
     // newlines/tabs inside text flattened so one doc == one line (both
@@ -62,18 +62,13 @@ class IngestSoakSpec extends SparkSuite {
     // for any plausible drain of this backlog, and the horizon is
     // processing-time-anchored (ingest_ts = current_timestamp), so a
     // multi-minute pathological stall is the only way they'd survive;
-    // the run-time assert below would catch that as a count mismatch.
+    // the twin checks below would catch that as a count mismatch.
 
     // ---- stream it: 2 files per trigger -> ~10+ micro-batches
     val listener = new graft.streaming.FunnelListener().register(spark)
-    val q = IngestMain.transform(
-        Sources.readTextStreamThrottled(spark, in, maxFilesPerTrigger = 2))
-      .writeStream.format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/checkpoint")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q = IngestMain.sink(
+      IngestMain.transform(Sources.readTextStreamThrottled(spark, in, maxFilesPerTrigger = 2)),
+      out, Trigger.AvailableNow())
     try assert(q.awaitTermination(600000), "soak did not drain in 10 min")
     finally q.stop()
     val nBatches = q.recentProgress.count(_.numInputRows > 0)
@@ -83,43 +78,21 @@ class IngestSoakSpec extends SparkSuite {
         IngestMain.listenerFunnel(listener, q))
       finally spark.streams.removeListener(listener)
 
-    // ---- batch twin on the same files, independent formulation
-    val raw = spark.read.text(in)
-    val parsed = raw
-      .select(expr("try_cast(get(split(value, '\t'), 0) AS bigint)").as("doc_id"),
-        get(split($"value", "\t"), lit(1)).as("text"))
-    val rowsIn = raw.count()
-    val nMalformed = parsed.filter($"doc_id".isNull || $"text".isNull).count()
-    val wellFormed = parsed.filter($"doc_id".isNotNull && $"text".isNotNull)
-    // batch quality gate via the batch API (qualityScore), then re-join
-    // the kept ids — a different plan shape than the stream's inline gate
-    val keptIds = TextAnalysis.qualityScore(wellFormed)
-      .filter($"keep").select("doc_id")
-    // per-LINE kept count (the stream's gate counts rows, pre-dedup):
-    // duplicate lines are verbatim copies, so joining lines against the
-    // distinct kept ids counts each surviving line exactly once
-    val nKept = wellFormed.join(keptIds.distinct(), "doc_id").count()
-
-    assert(funnel("rows_in") === rowsIn)
-    assert(funnel("rows_malformed") === nMalformed)
-    assert(funnel("rows_kept") === nKept,
-      s"gate funnel diverged: stream=${funnel("rows_kept")} batch=$nKept")
+    // ---- batch twin on the same files, independent formulation (the
+    // batch qualityScore API vs the stream's inline gate): funnel, sink
+    // rows == DISTINCT kept ids, no PII left in what was written
+    val backlogLines = (lines.length + dupes.length + malformed.length).toLong
+    val checks = SoakMain.twinChecks(spark, in, out, funnel, backlogLines)
+    assert(checks.filter { case (_, a, b) => a != b } === Seq.empty)
+    val batch = checks.map { case (n, _, b) => n -> b }.toMap
     // sanity on the instance itself: the duplicates and malformed lines
     // actually exercised their paths
-    assert(rowsIn === (lines.length + dupes.length + malformed.length).toLong)
-    assert(nMalformed >= 2) // "no tab here" and "not_a_number" at minimum
-
-    // ---- sink contract: written rows == DISTINCT kept ids (id-dedup),
-    // and every written doc is PII-clean
-    val written = spark.read.parquet(s"$out/data")
-    val nWritten = written.count()
-    val nDistinctKept = keptIds.distinct().count()
-    assert(nWritten === nDistinctKept,
-      s"dedup sink diverged: written=$nWritten batch-distinct=$nDistinctKept")
-    assert(written.filter($"text_redacted".rlike(TextAnalysis.EmailRe)).count() === 0L)
+    assert(batch("rows_in") === backlogLines)
+    assert(batch("rows_malformed") >= 2L) // "no tab here" and "not_a_number" at minimum
     // the duplicated block was actually gated IN (else the dedup path
     // tested nothing): at least one duplicated id must appear among keeps
+    val written = spark.read.parquet(s"$out/data")
     val dupIds = dupes.map(_.split("\t")(0).toLong).toSet
     assert(written.filter($"doc_id".isin(dupIds.toSeq.map(Long.box): _*)).count() > 0)
-  }
+  }}
 }

@@ -14,9 +14,20 @@ class IngestSpec extends SparkSuite {
   private def goodText(i: Long) =
     (1 to 12).map(j => s"w$i$j").mkString(" ") + s" mail user$i@ex.example.com"
 
-  test("AvailableNow ingest: gates, redacts, dedups; restart resumes from checkpoint") {
-    val in = java.nio.file.Files.createTempDirectory("graft-ingest-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-ingest-out").toString
+  /** A fresh (backlog dir, output dir) pair, both removed after `body`. */
+  private def withInOut[A](prefix: String)(body: (String, String) => A): A =
+    withTempDir(prefix) { work =>
+      java.nio.file.Files.createDirectories(java.nio.file.Path.of(work, "in"))
+      body(s"$work/in", s"$work/out")
+    }
+
+  /** The ingest transform over a one-file-per-trigger drain of `in`. */
+  private def startDrain(in: String, out: String) =
+    IngestMain.sink(
+      IngestMain.transform(Sources.readTextStreamThrottled(spark, in, maxFilesPerTrigger = 1)),
+      out, Trigger.AvailableNow())
+
+  test("AvailableNow ingest: gates, redacts, dedups; restart resumes from checkpoint") { withInOut("graft-ingest") { (in, out) =>
 
     def writeFile(name: String, rows: Seq[String]): Unit =
       java.nio.file.Files.writeString(
@@ -27,14 +38,7 @@ class IngestSpec extends SparkSuite {
     // after asserting the PERSISTED funnel file carries the same counts
     def drain(): Map[String, Long] = {
       val listener = new graft.streaming.FunnelListener().register(spark)
-      val q = IngestMain.transform(
-          Sources.readTextStreamThrottled(spark, in, maxFilesPerTrigger = 1))
-        .writeStream.format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/checkpoint")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val q = startDrain(in, out)
       try assert(q.awaitTermination(180000)) finally q.stop()
       val funnel =
         try IngestMain.persistFunnel(spark, q, s"$out/funnel",
@@ -76,16 +80,14 @@ class IngestSpec extends SparkSuite {
     val second = spark.read.parquet(s"$out/data")
       .select("doc_id").as[Long].collect().sorted
     assert(second.toSeq === Seq(1L, 3L, 4L))
-  }
+  }}
 
-  test("funnel survives the recentProgress ring buffer: exact past the cap") {
+  test("funnel survives the recentProgress ring buffer: exact past the cap") { withInOut("graft-ring") { (in, out) =>
     // recentProgress keeps only the last numRecentProgressUpdates
     // entries; a funnel summed from it under-reports any run longer
     // than the cap. Cap at 2, run a 6-batch backlog, and require the
     // listener funnel to count every line while recentProgress provably
     // lost batches — the defect the FunnelListener exists to fix.
-    val in = java.nio.file.Files.createTempDirectory("graft-ring-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-ring-out").toString
     val nFiles = 6
     (0 until nFiles).foreach { i =>
       java.nio.file.Files.writeString(
@@ -93,14 +95,7 @@ class IngestSpec extends SparkSuite {
     }
     withSQLConf("spark.sql.streaming.numRecentProgressUpdates" -> "2") {
       val listener = new graft.streaming.FunnelListener().register(spark)
-      val q = IngestMain.transform(
-          Sources.readTextStreamThrottled(spark, in, maxFilesPerTrigger = 1))
-        .writeStream.format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/checkpoint")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val q = startDrain(in, out)
       try {
         assert(q.awaitTermination(180000))
         val funnel = IngestMain.listenerFunnel(listener, q)
@@ -113,5 +108,5 @@ class IngestSpec extends SparkSuite {
         assert(funnel("rows_malformed") === 0L)
       } finally { q.stop(); spark.streams.removeListener(listener) }
     }
-  }
+  }}
 }

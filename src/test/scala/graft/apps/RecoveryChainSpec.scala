@@ -18,11 +18,11 @@ class RecoveryChainSpec extends SparkSuite {
     val in = s"$work/in"
     SoakMain.buildBacklog(spark, "/root/testdata/sf0.01", in,
       files = 30, dupDocs = 50L)
-    val (sup, supPhases) = withSQLConf(RecoveryChainProbe.legConfs(suppress = true): _*) {
+    val (_, sup, supPhases) = withSQLConf(RecoveryChainProbe.legConfs(suppress = true): _*) {
       RecoveryChainProbe.runLeg(
         spark, in, s"$work/sup", targets = Seq(4L, 8L), triggerMs = 100L)
     }
-    val (ctl, _) = withSQLConf(RecoveryChainProbe.legConfs(suppress = false): _*) {
+    val (_, ctl, _) = withSQLConf(RecoveryChainProbe.legConfs(suppress = false): _*) {
       RecoveryChainProbe.runLeg(
         spark, in, s"$work/ctl", targets = Seq(4L, 8L),
         triggerMs = 100L, maxChainAtStop = 5L)

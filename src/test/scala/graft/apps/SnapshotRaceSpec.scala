@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rewords the message — silently reclassifying the benign race as a
   * hard failure, or worse, a hard failure as benign — fails HERE, in
   * milliseconds, not in a 30-minute soak. */
-class SnapshotRaceSpec extends AnyFunSuite {
+class SnapshotRaceSpec extends AnyFunSuite with graft.TempDirs {
 
   private def ex(msg: String, cause: Throwable = null) =
     new RuntimeException(msg, cause)
@@ -86,7 +86,7 @@ class SnapshotRaceSpec extends AnyFunSuite {
   }
 
   test("zipCountByPartition counts snapshot zips per numeric partition dir") {
-    val root = java.nio.file.Files.createTempDirectory("graft-zipcount")
+    val root = java.nio.file.Path.of(tempDir("graft-zipcount"))
     def touch(parts: String*): Unit = {
       val p = java.nio.file.Path.of(root.toString, parts: _*)
       java.nio.file.Files.createDirectories(p.getParent)

@@ -18,8 +18,7 @@ class TablesCatalogSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-catalog-$tag").toString
+  private def tmpDir(tag: String): String = tempDir(s"graft-catalog-$tag")
 
   /** `body`'s result and the Spark jobs it launched, counted by a
     * job-start listener once the listener bus has drained. */

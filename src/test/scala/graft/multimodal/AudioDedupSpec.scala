@@ -103,13 +103,13 @@ class AudioDedupSpec extends SparkSuite {
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(kept === Seq(11L, 12L))
     // sink round trip + the TEXT store compaction job on the audio store
-    val out = java.nio.file.Files.createTempDirectory("audsink").toString
+    val out = tempDir("audsink")
     AudioDedup.incrementalAudioSink(out)(storeAudio, 0L)
     AudioDedup.incrementalAudioSink(out)(batch, 1L)
     val keptSink = spark.read.parquet(s"$out/data")
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(keptSink === Seq(0L, 11L, 12L))
-    val dest = java.nio.file.Files.createTempDirectory("audstore").toString
+    val dest = tempDir("audstore")
     val (before, after) = graft.dedup.Dedup.compactBandStore(
       spark, s"$out/store", dest)
     assert(after <= before && after > 0)

@@ -167,7 +167,7 @@ class ImageDedupSpec extends SparkSuite {
     assert(kept2 === Seq(14L))
     // sink shape: two foreachBatch invocations against a fresh store
     // dir; batch 2 re-offers A's shifted copy → rejected via the store
-    val out = java.nio.file.Files.createTempDirectory("imgsink").toString
+    val out = tempDir("imgsink")
     ImageDedup.incrementalImageSink(out)(storeImgs, 0L)
     ImageDedup.incrementalImageSink(out)(batch, 1L)
     val keptSink = spark.read.parquet(s"$out/data")
@@ -180,7 +180,7 @@ class ImageDedupSpec extends SparkSuite {
     assert(replay === keptSink, "foreachBatch replay must be idempotent")
     // the image store compacts with the TEXT store's maintenance job —
     // same (bkey, batch) layout, same set-membership semantics
-    val dest = java.nio.file.Files.createTempDirectory("imgstore").toString
+    val dest = tempDir("imgstore")
     val (before, after) = graft.dedup.Dedup.compactBandStore(
       spark, s"$out/store", dest)
     assert(after <= before && after > 0)

@@ -84,7 +84,7 @@ class VideoDedupSpec extends SparkSuite {
     assert(kept2 === Seq(13L))
     // sink: batch 0 seeds the store, batch 1 gates against it; replay
     // of batch 1 is idempotent
-    val out = java.nio.file.Files.createTempDirectory("vidsink").toString
+    val out = tempDir("vidsink")
     VideoDedup.incrementalVideoSink(out)(
       Seq((0L, clip(Seq(1, 2, 3, 4)))).toDF("doc_id", "payload"), 0L)
     VideoDedup.incrementalVideoSink(out)(batch, 1L)

@@ -83,7 +83,7 @@ class IncrementalIvfSpec extends SparkSuite {
     for (c <- 0L until 2L)
       live.update(emb.filter(col("vec_id") >= c * span &&
         col("vec_id") < math.min(n, (c + 1) * span)))
-    val ckpt = Files.createTempDirectory("ivf_ckpt").resolve("state").toString
+    val ckpt = s"${tempDir("ivf_ckpt")}/state"
     live.saveCheckpoint(spark, ckpt)
     val restored = Similarity.restoreIncrementalIvfState(spark.read.parquet(ckpt))
 
@@ -233,7 +233,7 @@ class IncrementalIvfSpec extends SparkSuite {
     def epoch(c: Long) =
       data.filter { case (id, _) => id >= c * span && id < (c + 1) * span }
 
-    val work = Files.createTempDirectory("ivf_restart")
+    val work = java.nio.file.Path.of(tempDir("ivf_restart"))
     val ckptLoc = work.resolve("spark_ckpt").toString
     val ivfDir = work.resolve("ivf")
     Files.createDirectories(ivfDir)

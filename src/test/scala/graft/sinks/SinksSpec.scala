@@ -1,7 +1,6 @@
 package graft.sinks
 
 import java.io.File
-import java.nio.file.Files
 
 import graft.SparkSuite
 import graft.sources.Sources
@@ -10,7 +9,7 @@ class SinksSpec extends SparkSuite {
   import spark.implicits._
 
   test("K3/K4 writeAsText: tuple-style lines, OVERWRITE semantics, single file") {
-    val dir = Files.createTempDirectory("graft-text").toString + "/out"
+    val dir = tempDir("graft-text") + "/out"
     Sinks.writeText(Seq(("a", 1L)).toDF("w", "c"), dir)
     assert(Sources.readText(spark, dir).as[String].collect().toSeq === Seq("(a,1)"))
 

@@ -42,8 +42,7 @@ class LayoutSpec extends SparkSuite {
     bytes.get()
   }
 
-  test("range-clustered layout reads a fraction of the bytes for a time-slice scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-layout").toString
+  test("range-clustered layout reads a fraction of the bytes for a time-slice scan") { withTempDir("graft-layout") { tmp =>
     // 10 x sf0.1 (1M rows): big enough that row-group data dwarfs the
     // per-file footer/dictionary bytes every scan pays regardless of
     // pruning (at 100k rows the ~3.5 KB x 8 footers were most of the
@@ -74,10 +73,9 @@ class LayoutSpec extends SparkSuite {
     // so footer/overhead noise can't flake the assert.
     assert(bRanged * 2 < bRandom,
       s"range layout did not prune: ranged=$bRanged random=$bRandom")
-  }
+  }}
 
-  test("z-order layout prunes on the SECOND dimension where a 1-D range layout cannot") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+  test("z-order layout prunes on the SECOND dimension where a 1-D range layout cannot") { withTempDir("graft-zorder") { tmp =>
     val ev1 = Tables.events(spark, "/root/testdata/sf0.1")
       .select("event_id", "ts_ns", "user_id", "value")
     val ev = (1 to 10).map(_ => ev1).reduce(_ union _)
@@ -110,10 +108,9 @@ class LayoutSpec extends SparkSuite {
     // z-order: the user predicate's high bits prune most z-ranges; the
     // ts-only layout reads every file. 2x margin absorbs footer noise.
     assert(bZ * 2 < bT, s"z-order did not prune the user slab: z=$bZ tsOnly=$bT")
-  }
+  }}
 
-  test("compactRanged: many tiny files -> few row-sized files, rows intact, still clustered") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
+  test("compactRanged: many tiny files -> few row-sized files, rows intact, still clustered") { withTempDir("graft-compact") { tmp =>
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
       .select("event_id", "ts_ns", "value")
     // simulate an incremental writer: 64 splinter files
@@ -147,7 +144,7 @@ class LayoutSpec extends SparkSuite {
     val bSplintered = bytesReadOf(sliceAgg(spark.read.parquet(s"$tmp/splintered")))
     assert(bCompacted * 2 < bSplintered,
       s"compacted layout lost clustering: compacted=$bCompacted splintered=$bSplintered")
-  }
+  }}
 
   test("Tables.events schema-drift contract: timestamp[us] and INT64-nanos fixtures yield identical ts_ns/ts_sec") {
     // The driver has regenerated testdata once already, flipping events.ts
@@ -160,49 +157,50 @@ class LayoutSpec extends SparkSuite {
     val micros = Seq(0L, 999999L, 1000000L, 1723500000123456L, 4102444799999999L)
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us) }.toDF("event_id", "us")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tsdrift").toString
-    // generation 2: timestamp[us] without timezone (TIMESTAMP_NTZ), the
-    // current driver encoding
-    base.select($"event_id", timestamp_micros($"us").cast("timestamp_ntz").as("ts"))
-      .write.mode("overwrite").parquet(s"$tmp/us/events.parquet")
-    // generation 1: INT64 epoch nanoseconds (what TIMESTAMP(NANOS) loads
-    // as under spark.sql.legacy.parquet.nanosAsLong)
-    base.select($"event_id", ($"us" * 1000L).as("ts"))
-      .write.mode("overwrite").parquet(s"$tmp/ns/events.parquet")
-    // generation 1 as shipped: an INT64 annotated TIMESTAMP(NANOS), which
-    // Spark cannot write, so it goes through parquet-mr's example writer
-    locally {
-      import org.apache.parquet.example.data.simple.SimpleGroupFactory
-      import org.apache.parquet.hadoop.example.ExampleParquetWriter
-      import org.apache.parquet.schema.MessageTypeParser
-      val schema = MessageTypeParser.parseMessageType(
-        "message events { required int64 event_id; " +
-          "required int64 ts (TIMESTAMP(NANOS,false)); }")
-      val writer = ExampleParquetWriter
-        .builder(new org.apache.hadoop.fs.Path(s"$tmp/nanos/events.parquet/part-0.parquet"))
-        .withType(schema).build()
-      val groups = new SimpleGroupFactory(schema)
-      try micros.zipWithIndex.foreach { case (us, i) =>
-        writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", us * 1000L))
-      } finally writer.close()
-    }
+    withTempDir("graft-tsdrift") { tmp =>
+      // generation 2: timestamp[us] without timezone (TIMESTAMP_NTZ), the
+      // current driver encoding
+      base.select($"event_id", timestamp_micros($"us").cast("timestamp_ntz").as("ts"))
+        .write.mode("overwrite").parquet(s"$tmp/us/events.parquet")
+      // generation 1: INT64 epoch nanoseconds (what TIMESTAMP(NANOS) loads
+      // as under spark.sql.legacy.parquet.nanosAsLong)
+      base.select($"event_id", ($"us" * 1000L).as("ts"))
+        .write.mode("overwrite").parquet(s"$tmp/ns/events.parquet")
+      // generation 1 as shipped: an INT64 annotated TIMESTAMP(NANOS), which
+      // Spark cannot write, so it goes through parquet-mr's example writer
+      locally {
+        import org.apache.parquet.example.data.simple.SimpleGroupFactory
+        import org.apache.parquet.hadoop.example.ExampleParquetWriter
+        import org.apache.parquet.schema.MessageTypeParser
+        val schema = MessageTypeParser.parseMessageType(
+          "message events { required int64 event_id; " +
+            "required int64 ts (TIMESTAMP(NANOS,false)); }")
+        val writer = ExampleParquetWriter
+          .builder(new org.apache.hadoop.fs.Path(s"$tmp/nanos/events.parquet/part-0.parquet"))
+          .withType(schema).build()
+        val groups = new SimpleGroupFactory(schema)
+        try micros.zipWithIndex.foreach { case (us, i) =>
+          writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", us * 1000L))
+        } finally writer.close()
+      }
 
-    def loaded(dir: String) = Tables.events(spark, dir)
-      .select("event_id", "ts_ns", "ts_sec").orderBy("event_id")
-    val expected = micros.zipWithIndex.map { case (us, i) =>
-      (i.toLong, us * 1000L, us / 1000000L)
-    }
-    val fromUs = loaded(s"$tmp/us")
-    Seq("us", "ns", "nanos").foreach { enc =>
-      // each fixture dir is fresh: the first read infers, the second is
-      // served the catalog's schema
-      val cold = loaded(s"$tmp/$enc")
-      val cached = loaded(s"$tmp/$enc")
-      Seq(cold, cached).foreach { df =>
-        assert(df.schema == fromUs.schema, s"enc=$enc")
-        assert(df.schema("ts_ns").dataType.typeName == "long", s"enc=$enc")
-        assert(df.schema("ts_sec").dataType.typeName == "long", s"enc=$enc")
-        assert(df.as[(Long, Long, Long)].collect().toSeq == expected, s"enc=$enc")
+      def loaded(dir: String) = Tables.events(spark, dir)
+        .select("event_id", "ts_ns", "ts_sec").orderBy("event_id")
+      val expected = micros.zipWithIndex.map { case (us, i) =>
+        (i.toLong, us * 1000L, us / 1000000L)
+      }
+      val fromUs = loaded(s"$tmp/us")
+      Seq("us", "ns", "nanos").foreach { enc =>
+        // each fixture dir is fresh: the first read infers, the second is
+        // served the catalog's schema
+        val cold = loaded(s"$tmp/$enc")
+        val cached = loaded(s"$tmp/$enc")
+        Seq(cold, cached).foreach { df =>
+          assert(df.schema == fromUs.schema, s"enc=$enc")
+          assert(df.schema("ts_ns").dataType.typeName == "long", s"enc=$enc")
+          assert(df.schema("ts_sec").dataType.typeName == "long", s"enc=$enc")
+          assert(df.as[(Long, Long, Long)].collect().toSeq == expected, s"enc=$enc")
+        }
       }
     }
   }
@@ -215,36 +213,36 @@ class LayoutSpec extends SparkSuite {
     val micros = days.map(_ * 86400L * 1000000L)
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us) }.toDF("o_orderkey", "us")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-odrift").toString
-    base.select($"o_orderkey", timestamp_micros($"us").cast("timestamp_ntz").as("o_orderdate"))
-      .write.mode("overwrite").parquet(s"$tmp/ntz/orders.parquet")
-    base.select($"o_orderkey", timestamp_micros($"us").as("o_orderdate"))
-      .write.mode("overwrite").parquet(s"$tmp/ltz/orders.parquet")
-    base.select($"o_orderkey", timestamp_micros($"us").cast("date").as("o_orderdate"))
-      .write.mode("overwrite").parquet(s"$tmp/date/orders.parquet")
-    base.select($"o_orderkey", ($"us" * 1000L).as("o_orderdate"))
-      .write.mode("overwrite").parquet(s"$tmp/ns/orders.parquet")
+    withTempDir("graft-odrift") { tmp =>
+      base.select($"o_orderkey", timestamp_micros($"us").cast("timestamp_ntz").as("o_orderdate"))
+        .write.mode("overwrite").parquet(s"$tmp/ntz/orders.parquet")
+      base.select($"o_orderkey", timestamp_micros($"us").as("o_orderdate"))
+        .write.mode("overwrite").parquet(s"$tmp/ltz/orders.parquet")
+      base.select($"o_orderkey", timestamp_micros($"us").cast("date").as("o_orderdate"))
+        .write.mode("overwrite").parquet(s"$tmp/date/orders.parquet")
+      base.select($"o_orderkey", ($"us" * 1000L).as("o_orderdate"))
+        .write.mode("overwrite").parquet(s"$tmp/ns/orders.parquet")
 
-    val loaded = Seq("ntz", "ltz", "date", "ns").map { enc =>
-      enc -> Tables.orders(spark, s"$tmp/$enc")
-        .select("o_orderkey", "o_orderdate").orderBy("o_orderkey")
-    }
-    loaded.foreach { case (enc, df) =>
-      assert(df.schema("o_orderdate").dataType == TimestampNTZType, s"enc=$enc")
-    }
-    val expect = loaded.head._2.collect().map(_.toSeq).toSeq
-    loaded.tail.foreach { case (enc, df) =>
-      assert(df.collect().map(_.toSeq).toSeq == expect, s"enc=$enc")
-    }
-    // the literal-predicate shape every TPC-H query uses keeps working
-    loaded.foreach { case (enc, df) =>
-      assert(df.filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
-        .count() == 2, s"enc=$enc")
+      val loaded = Seq("ntz", "ltz", "date", "ns").map { enc =>
+        enc -> Tables.orders(spark, s"$tmp/$enc")
+          .select("o_orderkey", "o_orderdate").orderBy("o_orderkey")
+      }
+      loaded.foreach { case (enc, df) =>
+        assert(df.schema("o_orderdate").dataType == TimestampNTZType, s"enc=$enc")
+      }
+      val expect = loaded.head._2.collect().map(_.toSeq).toSeq
+      loaded.tail.foreach { case (enc, df) =>
+        assert(df.collect().map(_.toSeq).toSeq == expect, s"enc=$enc")
+      }
+      // the literal-predicate shape every TPC-H query uses keeps working
+      loaded.foreach { case (enc, df) =>
+        assert(df.filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
+          .count() == 2, s"enc=$enc")
+      }
     }
   }
 
-  test("bloom-filter layout prunes an id point-probe that min/max stats cannot") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+  test("bloom-filter layout prunes an id point-probe that min/max stats cannot") { withTempDir("graft-bloom") { tmp =>
     // The probe column must be UNCORRELATED with write order — a
     // monotone id gets page-level column-index pruning for free and
     // needs no bloom. The production shape blooms exist for is a random
@@ -289,5 +287,5 @@ class LayoutSpec extends SparkSuite {
     // 1 of 8 groups is a true hit; allow one more as bloom FP slack
     assert(rBloom * 4 <= n,
       s"bloom filter did not prune the point probe: bloom=$rBloom plain=$rPlain")
-  }
+  }}
 }

@@ -34,8 +34,7 @@ class PruningSpec extends SparkSuite {
     bytes.get()
   }
 
-  test("dim filter prunes fact partitions at runtime (plan + bytes read)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+  test("dim filter prunes fact partitions at runtime (plan + bytes read)") { withTempDir("graft-dpp") { tmp =>
     // partition the fact on the join column — the 100 TB layout decision
     // (date/tenant/priority) this mechanism exists for. sf0.1 (150k rows),
     // coalesced to one file per partition, so row-group data dwarfs the
@@ -84,5 +83,5 @@ class PruningSpec extends SparkSuite {
     // 2x margin absorbs footer overhead + the dim side's own bytes.
     assert(bPruned * 2 < bFull,
       s"DPP did not reduce bytes read: pruned=$bPruned full=$bFull")
-  }
+  }}
 }

@@ -23,8 +23,7 @@ class SchemaDriftSpec extends SparkSuite {
     Seq("r_regionkey", "CAST_OVERFLOW", "overflow")
 
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+  private def tmpDir(tag: String): String = tempDir(s"graft-$tag")
 
   /** Canonical-vs-drift harness: both fixtures written, both loaded
     * through the table loader, schemas must be identical (by full

@@ -36,8 +36,7 @@ class SourcesSpec extends SparkSuite {
     } finally { q.stop(); server.close() }
   }
 
-  test("S3 streaming text source tails a directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-text").toString
+  test("S3 streaming text source tails a directory") { withTempDir("graft-stream-text") { dir =>
     val q = Sources.readTextStream(spark, dir)
       .writeStream.format("memory").queryName("ftext").outputMode("append").start()
     try {
@@ -48,10 +47,9 @@ class SourcesSpec extends SparkSuite {
       val got = spark.table("ftext").as[String].collect().toSet
       assert(got === Set("one", "two", "three"))
     } finally q.stop()
-  }
+  }}
 
-  test("S3/S8 throttled file source drains a backlog one file per micro-batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-throttle-text").toString
+  test("S3/S8 throttled file source drains a backlog one file per micro-batch") { withTempDir("graft-throttle-text") { dir =>
     // backlog exists BEFORE the stream starts — the backfill case
     (0 until 5).foreach { i =>
       java.nio.file.Files.writeString(java.nio.file.Path.of(dir, s"f$i.txt"), s"line$i\n")
@@ -66,10 +64,9 @@ class SourcesSpec extends SparkSuite {
       // every micro-batch saw exactly one file's rows; nothing lost
       assert(batchSizes.synchronized(batchSizes.toSeq) === Seq.fill(5)(1L))
     } finally q.stop()
-  }
+  }}
 
-  test("Trigger.AvailableNow drains the whole backlog in throttled batches, then self-terminates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-anow-text").toString
+  test("Trigger.AvailableNow drains the whole backlog in throttled batches, then self-terminates") { withTempDir("graft-anow-text") { dir =>
     (0 until 5).foreach { i =>
       java.nio.file.Files.writeString(java.nio.file.Path.of(dir, s"f$i.txt"), s"line$i\n")
     }
@@ -85,7 +82,7 @@ class SourcesSpec extends SparkSuite {
       assert(spark.table("anow").as[String].collect().toSet ===
         (0 until 5).map(i => s"line$i").toSet)
     } finally q.stop()
-  }
+  }}
 
   test("S8/S9 rate-micro-batch through the generator mapping == batch generator") {
     val gen = SampleData.withGradeSalary(Sources.rateMicroBatch(spark, 10), "value")

@@ -12,6 +12,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * first delivery and the cross-restart sum stays exact. */
 class FunnelListenerSpec extends AnyFunSuite {
 
+  /** Shorthands for one observed long, or one state footprint, of a batch. */
+  private implicit class Deliver(l: FunnelListener) {
+    def record(queryId: UUID, runId: UUID, obs: String, field: String,
+               batchId: Long, value: Long): Unit =
+      l.recordBatch(queryId, runId, batchId, Map((obs, field) -> value), None)
+    // lag -1: the provider reported no upload metric
+    def recordState(queryId: UUID, runId: UUID, batchId: Long, rows: Long,
+                    mem: Long, sst: Long, lag: Long = -1L): Unit =
+      l.recordBatch(queryId, runId, batchId, Map.empty, Some((rows, mem, sst, lag)))
+  }
+
   test("totalByBatch counts a batch replayed across a restart exactly once") {
     val l = new FunnelListener
     val qid = UUID.randomUUID()
@@ -45,6 +56,21 @@ class FunnelListenerSpec extends AnyFunSuite {
     assert(l.totalByBatch(qid, "ingest", "rows_in") === 10L)
   }
 
+  test("a resumed run's metric-less re-report adds nothing and blanks nothing") {
+    val l = new FunnelListener
+    val qid = UUID.randomUUID()
+    val run1 = UUID.randomUUID()
+    val run2 = UUID.randomUUID()
+    l.record(qid, run1, "ingest", "rows_in", 0L, 10L)
+    l.record(qid, run1, "ingest", "rows_in", 1L, 10L)
+    // the resume posts the last committed batch again, without metrics
+    l.recordBatch(qid, run2, 1L, Map.empty, None)
+    assert(l.total(run2, "ingest", "rows_in") === 0L)
+    assert(l.totalByBatch(qid, "ingest", "rows_in") === 20L)
+    assert(l.distinctBatches(qid) === 2L)
+    assert(l.batchCount(run2) === 1L)
+  }
+
   test("totalByBatch separates query ids, observations, and fields") {
     val l = new FunnelListener
     val qa = UUID.randomUUID()
@@ -66,13 +92,15 @@ class FunnelListenerSpec extends AnyFunSuite {
     val l = new FunnelListener
     val qa = UUID.randomUUID()
     val qb = UUID.randomUUID()
+    val run1 = UUID.randomUUID()
+    val run2 = UUID.randomUUID()
     // out-of-order delivery (the listener bus is async w.r.t. the
     // driver); batch 1 replayed after a restart with identical footprint
-    l.recordState(qa, 2L, 300L, 3000L, 30L, 3L)
-    l.recordState(qa, 0L, 100L, 1000L, 10L, 1L)
-    l.recordState(qa, 1L, 200L, 2000L, 20L, 2L)
-    l.recordState(qa, 1L, 200L, 2000L, 20L, 2L) // replay: last wins, no dup
-    l.recordState(qb, 0L, 999L, 9990L, 99L) // no lag reported → -1
+    l.recordState(qa, run1, 2L, 300L, 3000L, 30L, 3L)
+    l.recordState(qa, run1, 0L, 100L, 1000L, 10L, 1L)
+    l.recordState(qa, run1, 1L, 200L, 2000L, 20L, 2L)
+    l.recordState(qa, run2, 1L, 200L, 2000L, 20L, 2L) // replay: last wins, no dup
+    l.recordState(qb, run1, 0L, 999L, 9990L, 99L) // no lag reported → -1
     assert(l.stateSeries(qa) === Seq(
       (0L, 100L, 1000L, 10L, 1L), (1L, 200L, 2000L, 20L, 2L),
       (2L, 300L, 3000L, 30L, 3L)))
@@ -125,47 +153,31 @@ class FunnelListenerSpec extends AnyFunSuite {
     assert(l.postRestartBatches(qid) === Set(0L))
   }
 
-  test("snapshotUploadByPartition keeps the last observation per metric " +
-    "key and separates queries") {
-    val l = new FunnelListener
-    val qa = UUID.randomUUID()
-    val qb = UUID.randomUUID()
-    // partition_0 keeps up; partition_3 is stuck at version 2 — the
-    // worst-K reporting re-surfaces it every batch and last-wins keeps
-    // the freshest observation, so the stuck store is attributable
-    l.recordPartUpload(qa, "SnapshotLastUploaded.partition_0_default", 5L, 6L)
-    l.recordPartUpload(qa, "SnapshotLastUploaded.partition_3_default", 5L, 2L)
-    l.recordPartUpload(qa, "SnapshotLastUploaded.partition_3_default", 9L, 2L)
-    l.recordPartUpload(qb, "SnapshotLastUploaded.partition_0_default", 1L, 2L)
-    assert(l.snapshotUploadByPartition(qa) === Map(
-      "SnapshotLastUploaded.partition_0_default" -> ((5L, 6L, 0L)),
-      "SnapshotLastUploaded.partition_3_default" -> ((9L, 2L, 8L))))
-    assert(l.snapshotUploadByPartition(qb) === Map(
-      "SnapshotLastUploaded.partition_0_default" -> ((1L, 2L, 0L))))
-    assert(l.snapshotUploadByPartition(UUID.randomUUID()).isEmpty)
-  }
-
   test("max census is immune to the post-restart fresh-gauge artifact; " +
     "last census is not") {
     val l = new FunnelListener
     val qid = UUID.randomUUID()
     val healthy = "SnapshotLastUploaded.partition_7_default"
     val starved = "SnapshotLastUploaded.partition_3_default"
+    val other = UUID.randomUUID()
     // steady state: partition 7 uploaded version 48 by batch 50
     l.recordPartUpload(qid, healthy, 50L, 48L)
+    // another query's stores never leak into this query's census
+    l.recordPartUpload(other, healthy, 1L, 2L)
     // post-restart phase: the gauge restarts at 0, so BOTH stores are
     // reported with uploaded 0 at batch 61 (lag 62) — the r18 injection
     // soak observed exactly this reading as "never uploaded" for stores
     // holding ~46 snapshot zips on disk
     l.recordPartUpload(qid, healthy, 61L, 0L)
     l.recordPartUpload(qid, starved, 61L, 0L)
-    // last-wins carries the artifact...
-    assert(l.snapshotUploadByPartition(qid)(healthy) === ((61L, 0L, 62L)))
+    // the batch's own (last) reading carries the artifact...
+    assert(FunnelListener.snapshotLag(61L,
+      Seq(java.util.Map.of(healthy, java.lang.Long.valueOf(0L)))) === 62L)
     // ...max-wins does not: the healthy store keeps its real upload,
     // the genuinely starved store stays at 0
     assert(l.snapshotUploadMaxByPartition(qid)(healthy) === ((50L, 48L, 3L)))
     assert(l.snapshotUploadMaxByPartition(qid)(starved) === ((61L, 0L, 62L)))
-    assert(l.allSnapshotUploadsMax(healthy) === ((50L, 48L, 3L)))
+    assert(l.snapshotUploadMaxByPartition(other) === Map(healthy -> ((1L, 2L, 0L))))
     // uploaded ties keep the LATER observation: a never-uploading
     // store's max row carries its final (deepest) lag
     l.recordPartUpload(qid, starved, 80L, 0L)
@@ -188,5 +200,45 @@ class FunnelListenerSpec extends AnyFunSuite {
     l.record(qid, run2, "ingest", "rows_in", 2L, 10L)
     assert(l.batchCount(run2) === 1L)
     assert(l.batchCount(run1) === 2L)
+  }
+
+  // The snapshot-lag rule shared by the listener and RecoveryChainProbe.
+  // The progress event cannot be constructed, so the rule is tested on
+  // the operators' custom-metric maps it reads.
+  private def metrics(kv: (String, Long)*): java.util.Map[String, java.lang.Long] = {
+    val m = new java.util.HashMap[String, java.lang.Long]
+    kv.foreach { case (k, v) => m.put(k, v) }
+    m
+  }
+
+  test("snapshotLag: no operator reporting an upload reads -1") {
+    assert(FunnelListener.snapshotLag(9L, Nil) === -1L)
+    assert(FunnelListener.snapshotLag(9L, Seq(metrics(), null)) === -1L)
+    assert(FunnelListener.snapshotLag(9L,
+      Seq(metrics("rocksdbSstFileSize" -> 4096L))) === -1L)
+  }
+
+  test("snapshotLag: a never-uploaded store (-1) clamps to version 0") {
+    // batch 9 commits state version 10; nothing uploaded → 10 behind
+    assert(FunnelListener.snapshotLag(9L,
+      Seq(metrics("SnapshotLastUploaded.partition_0_default" -> -1L))) === 10L)
+  }
+
+  test("snapshotLag: min upload within an operator, worst operator wins") {
+    val join = metrics(
+      "SnapshotLastUploaded.partition_0_left" -> 8L,
+      "SnapshotLastUploaded.partition_1_left" -> 6L) // this operator: 10 - 6
+    val dedup = metrics("SnapshotLastUploaded.partition_0_default" -> 3L) // 10 - 3
+    assert(FunnelListener.snapshotLag(9L, Seq(join)) === 4L)
+    assert(FunnelListener.snapshotLag(9L, Seq(join, dedup)) === 7L)
+    assert(FunnelListener.snapshotLag(9L, Seq(dedup, join)) === 7L)
+  }
+
+  test("snapshotLag: keys other than SnapshotLastUploaded are ignored") {
+    val m = metrics(
+      "SnapshotLastUploaded.partition_2_default" -> 9L,
+      "rocksdbSstFileSize" -> 0L, // a 0 here must not read as "uploaded 0"
+      "rocksdbCommitCompactLatency" -> 1L)
+    assert(FunnelListener.snapshotLag(9L, Seq(m)) === 1L)
   }
 }

@@ -341,8 +341,7 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
-  test("K3 streaming file sink: checkpointed parquet output round-trips") {
-    val base = java.nio.file.Files.createTempDirectory("graft-fsink").toString
+  test("K3 streaming file sink: checkpointed parquet output round-trips") { withTempDir("graft-fsink") { base =>
     val ms = mem[(Long, String)]
     val q = ms.toDF().toDF("id", "v").writeStream
       .format("parquet").option("path", s"$base/data")
@@ -355,7 +354,7 @@ class StreamingSpec extends SparkSuite {
         .as[(Long, String)].collect().toSet
       assert(got === Set((1L, "a"), (2L, "b"), (3L, "c")))
     }
-  }
+  }}
 
   test("K3 exactly-once across restart: a new query resumes from the checkpoint") {
     withTempDir("graft-restart") { base =>
@@ -514,81 +513,83 @@ class StreamingSpec extends SparkSuite {
 
   test("foreachBatch incremental dedup: cross-batch hash store, idempotent replay") {
     import graft.dedup.Dedup
-    val out = java.nio.file.Files.createTempDirectory("graft-incsink").toString
-    val ms = mem[(Long, String)]
-    val q = ms.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch((df: DataFrame, id: Long) => Dedup.incrementalSink(out)(df, id))
-      .option("checkpointLocation", s"$out/ck")
-      .start()
-    withQuery(q) {
-      ms.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha")); q.processAllAvailable()
-      ms.addData((4L, "beta"), (5L, "gamma")); q.processAllAvailable()
+    withTempDir("graft-incsink") { out =>
+      val ms = mem[(Long, String)]
+      val q = ms.toDF().toDF("doc_id", "text").writeStream
+        .foreachBatch((df: DataFrame, id: Long) => Dedup.incrementalSink(out)(df, id))
+        .option("checkpointLocation", s"$out/ck")
+        .start()
+      withQuery(q) {
+        ms.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha")); q.processAllAvailable()
+        ms.addData((4L, "beta"), (5L, "gamma")); q.processAllAvailable()
+      }
+      def dataIds = spark.read.parquet(s"$out/data")
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      // 3 is an intra-batch dup of 1; 4 is a CROSS-batch dup of 2
+      assert(dataIds === Seq(1L, 2L, 5L))
+      // replay of batch 1 (foreachBatch's failure contract): same content,
+      // same id — output must be unchanged, not emptied (the store read
+      // excludes the batch's own partition) and not doubled (overwrite)
+      Dedup.incrementalSink(out)(
+        Seq((4L, "beta"), (5L, "gamma")).toDF("doc_id", "text"), 1L)
+      assert(dataIds === Seq(1L, 2L, 5L))
     }
-    def dataIds = spark.read.parquet(s"$out/data")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    // 3 is an intra-batch dup of 1; 4 is a CROSS-batch dup of 2
-    assert(dataIds === Seq(1L, 2L, 5L))
-    // replay of batch 1 (foreachBatch's failure contract): same content,
-    // same id — output must be unchanged, not emptied (the store read
-    // excludes the batch's own partition) and not doubled (overwrite)
-    Dedup.incrementalSink(out)(
-      Seq((4L, "beta"), (5L, "gamma")).toDF("doc_id", "text"), 1L)
-    assert(dataIds === Seq(1L, 2L, 5L))
   }
 
   test("foreachBatch incremental NEAR-dup: cross-batch band store, idempotent replay") {
     import graft.dedup.Dedup
-    val out = java.nio.file.Files.createTempDirectory("graft-incnear").toString
-    val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods"
-    val nearDup = base.replace("lazy", "sleepy")
-    val other = "completely different text about spark and flink engines"
-    val ms = mem[(Long, String)]
-    val q = ms.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch((df: DataFrame, id: Long) => Dedup.incrementalNearDupSink(out)(df, id))
-      .option("checkpointLocation", s"$out/ck")
-      .start()
-    withQuery(q) {
-      ms.addData((1L, base), (2L, other)); q.processAllAvailable()
-      // 3 is a CROSS-batch near-dup of 1 (different bytes!), 4 is fresh
-      ms.addData((3L, nearDup), (4L, "unrelated fresh content words here")); q.processAllAvailable()
+    withTempDir("graft-incnear") { out =>
+      val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods"
+      val nearDup = base.replace("lazy", "sleepy")
+      val other = "completely different text about spark and flink engines"
+      val ms = mem[(Long, String)]
+      val q = ms.toDF().toDF("doc_id", "text").writeStream
+        .foreachBatch((df: DataFrame, id: Long) => Dedup.incrementalNearDupSink(out)(df, id))
+        .option("checkpointLocation", s"$out/ck")
+        .start()
+      withQuery(q) {
+        ms.addData((1L, base), (2L, other)); q.processAllAvailable()
+        // 3 is a CROSS-batch near-dup of 1 (different bytes!), 4 is fresh
+        ms.addData((3L, nearDup), (4L, "unrelated fresh content words here")); q.processAllAvailable()
+      }
+      def dataIds = spark.read.parquet(s"$out/data")
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(dataIds === Seq(1L, 2L, 4L))
+      // replay of batch 1: output unchanged — the store read excludes the
+      // batch's own band-key partition, so its docs aren't self-rejected
+      Dedup.incrementalNearDupSink(out)(
+        Seq((3L, nearDup), (4L, "unrelated fresh content words here")).toDF("doc_id", "text"), 1L)
+      assert(dataIds === Seq(1L, 2L, 4L))
     }
-    def dataIds = spark.read.parquet(s"$out/data")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(dataIds === Seq(1L, 2L, 4L))
-    // replay of batch 1: output unchanged — the store read excludes the
-    // batch's own band-key partition, so its docs aren't self-rejected
-    Dedup.incrementalNearDupSink(out)(
-      Seq((3L, nearDup), (4L, "unrelated fresh content words here")).toDF("doc_id", "text"), 1L)
-    assert(dataIds === Seq(1L, 2L, 4L))
   }
 
   test("band-store compaction: globally distinct keys, gate decisions unchanged") {
     import graft.dedup.Dedup
     import org.apache.spark.sql.functions.col
-    val out = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods"
-    // two batches sharing most band keys (same doc content re-seen)
-    Dedup.incrementalNearDupSink(out)(Seq((1L, base)).toDF("doc_id", "text"), 0L)
-    Dedup.incrementalNearDupSink(out)(
-      Seq((2L, base.replace("lazy", "sleepy"))).toDF("doc_id", "text"), 1L)
-    val (before, after) = Dedup.compactBandStore(spark, s"$out/store", s"$out/store2")
-    assert(after < before, "cross-batch repeats must compact away")
-    assert(after ==
-      spark.read.parquet(s"$out/store").select("bkey").distinct().count())
-    // the gate admits/rejects identically against the compacted store
-    // (probe 3 re-sends SEEN content — identical band keys, certain hit)
-    val probe = Seq((3L, base), (4L, "totally new and different stuff"))
-      .toDF("doc_id", "text")
-    def gate(dir: String) = Dedup.incrementalNearDup(probe,
-        spark.read.parquet(dir).select("bkey"))
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(gate(s"$out/store2") === gate(s"$out/store"))
-    // probe 3 shares bands with seen content → rejected; 4 admitted
-    assert(gate(s"$out/store2") === Seq(4L))
+    withTempDir("graft-compact") { out =>
+      val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods"
+      // two batches sharing most band keys (same doc content re-seen)
+      Dedup.incrementalNearDupSink(out)(Seq((1L, base)).toDF("doc_id", "text"), 0L)
+      Dedup.incrementalNearDupSink(out)(
+        Seq((2L, base.replace("lazy", "sleepy"))).toDF("doc_id", "text"), 1L)
+      val (before, after) = Dedup.compactBandStore(spark, s"$out/store", s"$out/store2")
+      assert(after < before, "cross-batch repeats must compact away")
+      assert(after ==
+        spark.read.parquet(s"$out/store").select("bkey").distinct().count())
+      // the gate admits/rejects identically against the compacted store
+      // (probe 3 re-sends SEEN content — identical band keys, certain hit)
+      val probe = Seq((3L, base), (4L, "totally new and different stuff"))
+        .toDF("doc_id", "text")
+      def gate(dir: String) = Dedup.incrementalNearDup(probe,
+          spark.read.parquet(dir).select("bkey"))
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(gate(s"$out/store2") === gate(s"$out/store"))
+      // probe 3 shares bands with seen content → rejected; 4 admitted
+      assert(gate(s"$out/store2") === Seq(4L))
+    }
   }
 
-  test("band-store TTL retention: ages out by NEWEST sighting, stays age-aware") {
-    val out = java.nio.file.Files.createTempDirectory("graft-ttl").toString
+  test("band-store TTL retention: ages out by NEWEST sighting, stays age-aware") { withTempDir("graft-ttl") { out =>
     // k1 seen only in batch 0; k2 re-seen in batch 1; k3 new in batch 1
     Seq("k1", "k2").toDF("bkey").write.parquet(s"$out/store/batch=0")
     Seq("k2", "k3").toDF("bkey").write.parquet(s"$out/store/batch=1")
@@ -604,7 +605,7 @@ class StreamingSpec extends SparkSuite {
     val (_, after2) = graft.dedup.Dedup.compactBandStoreRetain(
       spark, s"$out/store2", s"$out/store3", minBatch = 2L)
     assert(after2 === 0L)
-  }
+  }}
 
   test("stream-static enrich: broadcast dim join per micro-batch == batch, left rows survive") {
     val dim = Seq((1, "gold"), (2, "silver")).toDF("user_id", "tier")
