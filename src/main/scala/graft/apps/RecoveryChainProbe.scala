@@ -154,13 +154,17 @@ object RecoveryChainProbe {
     val in = s"$work/in"
     SoakMain.buildBacklog(spark, data, in, files, dupDocs = 200L)
 
-    configure(spark, suppress = true)
-    val (_, supSamples, supPhases) =
-      runLeg(spark, in, s"$work/suppressed", targets, triggerMs)
+    // control first: the JVM's warm-up then lands in the control leg,
+    // whose flatness bound has a 3 s floor, not in the suppressed leg's
+    // shortest-chain sample, the base of per_version_ms and of the
+    // superlinear gate
     configure(spark, suppress = false)
     val (_, ctlSamples, ctlPhases) =
       runLeg(spark, in, s"$work/control", targets, triggerMs,
         maxChainAtStop = 8L)
+    configure(spark, suppress = true)
+    val (_, supSamples, supPhases) =
+      runLeg(spark, in, s"$work/suppressed", targets, triggerMs)
 
     def fmt(xs: Seq[(Long, Double)]): String = xs.map { case (c, s) =>
       s"[$c,${math.rint(s * 1000) / 1000}]" }.mkString("[", ",", "]")
